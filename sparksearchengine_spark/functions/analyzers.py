@@ -26,7 +26,7 @@ import re
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # --------------------------------------------------------------------------
@@ -438,3 +438,82 @@ class TextOptions:
         """The analyzer for query text on this field (falls back to the
         index-time analyzer when no override is configured)."""
         return self.query_analyzer or self.analyzer
+
+
+def explode_tokens(
+    df: DataFrame,
+    keys: list,
+    tokens: Column,
+    count_col: str | None = None,
+    pos_col: str | None = None,
+) -> DataFrame:
+    """``(*keys, [count_col,] [pos_col,] term)`` — one row per token of
+    ``tokens``, with ``tokens`` evaluated exactly ONCE per input row.
+    ``count_col`` is the row's token count (``dl`` / ``_nq``); a row whose
+    token array is NULL or empty yields no rows.
+
+    The tokens must be a column BEFORE the generator, and the generator
+    must be an outer one. Catalyst re-runs the analyzer otherwise:
+
+    * analysis of ``select(size(toks), posexplode(toks))`` moves the
+      generator into a ``Generate`` node and leaves ``size(toks)`` in a
+      Project ABOVE it, evaluated per exploded row: 1 + n analyzer runs
+      for an n-token row, quadratic in tokens per row;
+    * ``InferFiltersFromGenerate`` adds ``size(e) > 0 AND e IS NOT NULL``
+      under a non-outer generator, and predicate pushdown substitutes the
+      alias and moves it below any repartition — a second analyzer pass
+      per row, on the input's partitioning. The outer generator infers
+      nothing; the ``term IS NOT NULL`` filter drops the one null row it
+      emits for an empty array (a NULL array counts as empty).
+    """
+    staged = df.select(
+        *keys,
+        F.coalesce(tokens, F.array().cast("array<string>")).alias("_toks"),
+    )
+    gen = (
+        F.posexplode_outer("_toks").alias(pos_col, "term")
+        if pos_col
+        else F.explode_outer("_toks").alias("term")
+    )
+    count = [F.size("_toks").alias(count_col)] if count_col else []
+    return staged.select(*staged.columns[:-1], *count, gen).where(
+        F.col("term").isNotNull()
+    )
+
+
+def postings_rows(
+    df: DataFrame,
+    doc_id: Column,
+    tokens: Column,
+    field: str,
+    positions: bool = True,
+) -> DataFrame:
+    """``(field, term, doc_id, tf, dl, positions)`` — one postings row per
+    (doc, term) of ``df``: ``explode_tokens`` to (doc_id, dl, pos, term),
+    then ONE codegen'd aggregate for (tf, positions). ``dl`` (field
+    length in tokens) is ``size(tokens)``, a per-doc constant carried
+    through the explode and grouped on, so no Sort+Window re-derives it
+    as ``sum(tf)``. ``positions`` False gives a NULL positions column.
+    The postings shape of both the batch build
+    (``Corpus._postings_frame``) and the streamed one
+    (``streaming.stream_postings``)."""
+    ex = explode_tokens(
+        df, [doc_id.alias("doc_id")], tokens, "dl", pos_col="pos"
+    )
+    pos_agg = (
+        F.sort_array(F.collect_list("pos")).alias("positions")
+        if positions
+        else F.lit(None).cast("array<int>").alias("positions")
+    )
+    return (
+        ex.groupBy("doc_id", "dl", "term")
+        .agg(F.count(F.lit(1)).cast("long").alias("tf"), pos_agg)
+        .select(
+            F.lit(field).alias("field"),
+            "term",
+            "doc_id",
+            "tf",
+            F.col("dl").cast("long").alias("dl"),
+            "positions",
+        )
+    )

@@ -45,7 +45,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
-from sparksearchengine_spark.functions.analyzers import TextOptions, analyzer_expr
+from sparksearchengine_spark.functions.analyzers import (
+    TextOptions,
+    analyzer_expr,
+    postings_rows,
+)
 from sparksearchengine_spark.functions.scoring import ScoringConfig
 
 DOC_ID = "doc_id"  # reserved result column (reference reserves "$id")
@@ -154,17 +158,12 @@ class Corpus:
             # that distributes the tokenize work: shuffling after the
             # analyzer would evaluate the regex chain on the INPUT's
             # partitioning, which for a narrow source is one core), then
-            # posexplode to (pos, term) rows, then ONE codegen'd aggregate
+            # explode to (dl, pos, term) rows, then ONE codegen'd aggregate
             # for (tf, positions). HashPartitioning(doc_id) satisfies the
-            # aggregate's ClusteredDistribution(doc_id, term) (subset key),
-            # so no second exchange, and postings come out
+            # aggregate's ClusteredDistribution(doc_id, dl, term) (subset
+            # key), so no second exchange, and postings come out
             # doc_id-partitioned — which makes the (query_id, doc_id)
             # score aggregation in query_join/batch_search shuffle-free.
-            # dl (= total tokens in the doc) is recovered as sum(tf) over
-            # the doc's postings via a window on the SAME partitioning
-            # (local sort, no exchange) — computing it pre-explode would
-            # either re-evaluate the analyzer per reference (project
-            # collapse) or shuffle token arrays instead of raw text.
             # Deliberately NOT a per-row higher-order-function expression:
             # nested transform/filter HOFs are CodegenFallback (interpreted)
             # and O(|vocab_doc| * dl) per doc — measured 2-4x slower than
@@ -201,41 +200,19 @@ class Corpus:
                     f"text column {fname!r} must be string or "
                     f"array<string>, got {dtype.simpleString()}"
                 )
-            toks = analyzer_expr(F.col("_raw"), opts.analyzer)
             raw = self.df.select(
                 F.col(self.id_col).cast("long").alias(DOC_ID),
                 src.alias("_raw"),
             ).repartition(nparts, DOC_ID)
-            safe_toks = F.coalesce(toks, F.array().cast("array<string>"))
-            # dl (field length in tokens) is size(toks), known BEFORE the
-            # explode — carrying it through as a per-doc constant and
-            # grouping on it removes the Sort+Window pass that re-derived
-            # it as sum(tf) over a doc_id partition (same value by
-            # construction, one fewer operator pair in every build)
-            ex = raw.select(
-                DOC_ID,
-                F.size(safe_toks).cast("long").alias("dl"),
-                F.posexplode(safe_toks).alias("pos", "term"),
-            )
-            pos_agg = (
-                F.sort_array(F.collect_list("pos")).alias("positions")
-                if opts.positions
-                else F.first(F.lit(None).cast("array<int>")).alias("positions")
-            )
-            pf = (
-                ex.groupBy(DOC_ID, "dl", "term")
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("tf"),
-                    pos_agg,
-                )
-                .select(
-                    F.lit(fname).alias("field"),
-                    "term",
-                    F.col(DOC_ID),
-                    "tf",
-                    "dl",
-                    "positions",
-                )
+            # the tokens are a column before the generator
+            # (explode_tokens), so the analyzer runs once per doc, after
+            # the shuffle
+            pf = postings_rows(
+                raw,
+                F.col(DOC_ID),
+                analyzer_expr(F.col("_raw"), opts.analyzer),
+                fname,
+                opts.positions,
             )
             per_field.append(pf)
 
@@ -255,40 +232,8 @@ class Corpus:
         index build being the expensive first action
         (`PartitionsIndexLuceneRDD.scala:588-593`).
         """
-        postings = self._postings_frame()
-        if persist:
-            postings = postings.persist()
-
-        termstats = (
-            postings.groupBy("field", "term")
-            .agg(F.count(F.lit(1)).cast("long").alias("df_t"))
-        )
-        if persist:
-            termstats = termstats.persist()
-
-        stats_rows = (
-            postings.select("field", DOC_ID, "dl")
-            .distinct()
-            .groupBy("field")
-            .agg(
-                F.count(F.lit(1)).alias("doc_count"),
-                F.avg("dl").alias("avgdl"),
-            )
-            .collect()
-        )
-        fieldstats = {
-            r["field"]: FieldStats(int(r["doc_count"]), float(r["avgdl"]))
-            for r in stats_rows
-        }
-        for fname in self.text_cols:
-            fieldstats.setdefault(fname, FieldStats(0, 0.0))
-
-        return SearchIndex(
-            corpus=self,
-            postings=postings,
-            termstats=termstats,
-            fieldstats=fieldstats,
-            scoring=scoring or ScoringConfig(),
+        return SearchIndex._from_postings(
+            self, self._postings_frame(), scoring or ScoringConfig(), persist
         )
 
 
@@ -336,6 +281,51 @@ class SearchIndex:
         # unpersist() can release them (no leaked cached blocks in a
         # long-lived session)
         self._phrase_caches: list[DataFrame] = []
+
+    @classmethod
+    def _from_postings(
+        cls,
+        corpus: Corpus,
+        postings: DataFrame,
+        scoring: ScoringConfig,
+        persist: bool = True,
+    ) -> "SearchIndex":
+        """The index over a postings frame: persist postings and the
+        termstats aggregate, collect fieldstats (one eager job), and give
+        every declared field with no postings ``FieldStats(0, 0.0)``. The
+        one stats path that build, merge and upsert share, so corpus-global
+        statistics are computed identically whichever way the postings
+        were produced."""
+        if persist:
+            postings = postings.persist()
+        termstats = postings.groupBy("field", "term").agg(
+            F.count(F.lit(1)).cast("long").alias("df_t")
+        )
+        if persist:
+            termstats = termstats.persist()
+        stats_rows = (
+            postings.select("field", DOC_ID, "dl")
+            .distinct()
+            .groupBy("field")
+            .agg(
+                F.count(F.lit(1)).alias("doc_count"),
+                F.avg("dl").alias("avgdl"),
+            )
+            .collect()
+        )
+        fieldstats = {
+            r["field"]: FieldStats(int(r["doc_count"]), float(r["avgdl"]))
+            for r in stats_rows
+        }
+        for fname in corpus.text_cols:
+            fieldstats.setdefault(fname, FieldStats(0, 0.0))
+        return cls(
+            corpus=corpus,
+            postings=postings,
+            termstats=termstats,
+            fieldstats=fieldstats,
+            scoring=scoring,
+        )
 
     def collection_stats(self, field: str) -> DataFrame:
         """(term, cf_t) — collection term frequency (total occurrences of
@@ -950,36 +940,8 @@ def merge_indexes(
         pa = pa.drop(TERM_BUCKET)
     if TERM_BUCKET in pb.columns:
         pb = pb.drop(TERM_BUCKET)
-    postings = pa.unionByName(pb)
-    if persist:
-        postings = postings.persist()
-    termstats = postings.groupBy("field", "term").agg(
-        F.count(F.lit(1)).cast("long").alias("df_t")
-    )
-    if persist:
-        termstats = termstats.persist()
-    stats_rows = (
-        postings.select("field", DOC_ID, "dl")
-        .distinct()
-        .groupBy("field")
-        .agg(
-            F.count(F.lit(1)).alias("doc_count"),
-            F.avg("dl").alias("avgdl"),
-        )
-        .collect()
-    )
-    fieldstats = {
-        r["field"]: FieldStats(int(r["doc_count"]), float(r["avgdl"]))
-        for r in stats_rows
-    }
-    for fname in ca.text_cols:
-        fieldstats.setdefault(fname, FieldStats(0, 0.0))
-    return SearchIndex(
-        corpus=merged_corpus,
-        postings=postings,
-        termstats=termstats,
-        fieldstats=fieldstats,
-        scoring=a.scoring,
+    return SearchIndex._from_postings(
+        merged_corpus, pa.unionByName(pb), a.scoring, persist
     )
 
 
@@ -1025,7 +987,10 @@ def upsert_index(
     delta only); compact a raw CDC stream first (`weburl.cdc_latest`
     latest-wins) or pass ``validate_unique=False`` after doing so.
     """
-    from sparksearchengine_spark.operators.search import decide_broadcast
+    from sparksearchengine_spark.operators.search import (
+        decide_broadcast,
+        ids_frame,
+    )
 
     corpus = base.corpus
     spark = corpus.df.sparkSession
@@ -1067,10 +1032,7 @@ def upsert_index(
                 F.col(deletes.columns[0]).cast("long").alias(UID)
             )
         else:
-            ids = [int(i) for i in deletes]
-            del_ids = spark.createDataFrame(
-                [(i,) for i in ids], f"{UID} long"
-            )
+            del_ids = ids_frame(spark, [int(i) for i in deletes], UID)
         touched = del_ids if touched is None else touched.unionByName(del_ids)
     touched = touched.distinct()
     if decide_broadcast(touched, max_rows=5_000_000):
@@ -1116,38 +1078,14 @@ def upsert_index(
         postings = surviving
         new_corpus_df = surviving_corpus
 
-    if persist:
-        postings = postings.persist()
-    termstats = postings.groupBy("field", "term").agg(
-        F.count(F.lit(1)).cast("long").alias("df_t")
-    )
-    if persist:
-        termstats = termstats.persist()
-    stats_rows = (
-        postings.select("field", DOC_ID, "dl")
-        .distinct()
-        .groupBy("field")
-        .agg(
-            F.count(F.lit(1)).alias("doc_count"),
-            F.avg("dl").alias("avgdl"),
-        )
-        .collect()
-    )
-    fieldstats = {
-        r["field"]: FieldStats(int(r["doc_count"]), float(r["avgdl"]))
-        for r in stats_rows
-    }
-    for fname in corpus.text_cols:
-        fieldstats.setdefault(fname, FieldStats(0, 0.0))
-    return SearchIndex(
-        corpus=Corpus(
+    return SearchIndex._from_postings(
+        Corpus(
             new_corpus_df,
             id_col=corpus.id_col,
             text_cols=corpus.text_cols,
             validate=False,
         ),
-        postings=postings,
-        termstats=termstats,
-        fieldstats=fieldstats,
-        scoring=base.scoring,
+        postings,
+        base.scoring,
+        persist,
     )

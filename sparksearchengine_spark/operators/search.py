@@ -26,10 +26,13 @@ from __future__ import annotations
 
 from typing import TYPE_CHECKING, Iterable
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sparksearchengine_spark.functions.analyzers import analyzer_expr
+from sparksearchengine_spark.functions.analyzers import (
+    analyzer_expr,
+    explode_tokens,
+)
 
 if TYPE_CHECKING:
     from sparksearchengine_spark.operators.index import SearchIndex
@@ -1462,6 +1465,10 @@ def query_join(
         # the hash. NULL/empty text hashes but explodes to no terms ->
         # no ranked rows -> left join yields null match columns, same as
         # the id path.
+        # The hash is non-nullable (NULL tokens hash as ""): a nullable
+        # join key makes Catalyst infer isnotnull(_qh) and push it,
+        # alias-substituted, below the query-terms explode, a second
+        # analyzer pass per query row; on a non-nullable key it folds away.
         # with row_filters the execution key must ALSO distinguish rows
         # by their filter values: same term set + different thresholds
         # are different queries
@@ -1474,16 +1481,11 @@ def query_join(
             else F.col("_qkey")
         )
         other = other.withColumn("_qkey", F.sort_array(qtoks)).withColumn(
-            "_qh", F.md5(F.to_json(hash_src))
+            "_qh", F.md5(F.coalesce(F.to_json(hash_src), F.lit("")))
         )
-        qterms = (
-            other.select(
-                F.col("_qh").alias("query_id"),
-                F.size("_qkey").alias("_nq"),
-                F.explode("_qkey").alias("term"),
-            )
-            .dropDuplicates(["query_id", "term"])
-        )
+        qterms = explode_tokens(
+            other, [F.col("_qh").alias("query_id")], F.col("_qkey"), "_nq"
+        ).dropDuplicates(["query_id", "term"])
     else:
         if other_id_col is None:
             # monotonically_increasing_id is nondeterministic across plan
@@ -1494,10 +1496,8 @@ def query_join(
                 "_qid", F.monotonically_increasing_id()
             ).localCheckpoint(eager=False)
             other_id_col = "_qid"
-        qterms = other.select(
-            F.col(other_id_col).alias("query_id"),
-            F.size(qtoks).alias("_nq"),
-            F.explode(qtoks).alias("term"),
+        qterms = explode_tokens(
+            other, [F.col(other_id_col).alias("query_id")], qtoks, "_nq"
         )
     key = "query_id"
 
@@ -1607,6 +1607,24 @@ def collect_matches(joined: DataFrame, group_cols: list[str]) -> DataFrame:
 # -- E11/E12: lookups ------------------------------------------------------
 
 
+def ids_frame(spark: SparkSession, ids: list[int], col: str) -> DataFrame:
+    """One-column ``long`` relation over driver-side ids. Inlined as a
+    JVM-side literal array instead of a Python-local createDataFrame: an
+    RDD-backed relation's broadcast spins up Python workers (~seconds
+    cold) for what is a handful of literals. The literal tree is bounded,
+    though: half a million ids as expression nodes choke
+    analysis/codegen, and at that size the createDataFrame overhead is
+    amortized anyway."""
+    if len(ids) > 10_000:
+        return spark.createDataFrame([(i,) for i in ids], f"{col} long")
+    arr = (
+        F.array(*[F.lit(i).cast("long") for i in ids])
+        if ids
+        else F.array().cast("array<long>")
+    )
+    return spark.range(1).select(F.explode(arr).alias(col))
+
+
 def _lookup_frame(index: "SearchIndex", ids: list[int]) -> DataFrame:
     """The corpus frame a point lookup should scan: on an index loaded
     from a doc-bucketed save, prune to the requested ids' buckets at the
@@ -1641,25 +1659,8 @@ def get_elements(index: "SearchIndex", ids: Iterable[int]) -> DataFrame:
     reference's ``None``), keyed by requested_id. Scans only the
     requested ids' bucket partitions on a doc-bucketed saved corpus."""
     c = index.corpus
-    spark = c.df.sparkSession
     id_list = [int(i) for i in ids]
-    # inline the ids as a JVM-side literal array instead of a Python-local
-    # createDataFrame: an RDD-backed relation's broadcast spins up Python
-    # workers (~seconds cold) for what is a handful of literals. Bound
-    # the literal tree, though — a 500k-id bulk lookup as half a million
-    # expression nodes chokes analysis/codegen (r3 review), and at that
-    # size the createDataFrame overhead is amortized anyway.
-    if len(id_list) <= 10_000:
-        id_arr = (
-            F.array(*[F.lit(i).cast("long") for i in id_list])
-            if id_list
-            else F.array().cast("array<long>")
-        )
-        ids_df = spark.range(1).select(F.explode(id_arr).alias("requested_id"))
-    else:
-        ids_df = spark.createDataFrame(
-            [(i,) for i in id_list], "requested_id long"
-        )
+    ids_df = ids_frame(c.df.sparkSession, id_list, "requested_id")
     elems = _lookup_frame(index, id_list).withColumn(
         "_did", F.col(c.id_col).cast("long")
     )

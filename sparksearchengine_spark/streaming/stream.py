@@ -12,11 +12,10 @@ rules at 100 TB:
 * sessionization uses the built-in ``session_window`` (JVM state store) —
   no Python-state operator needed for gap sessions;
 * incremental indexing appends per-batch postings via ``foreachBatch``:
-  the batch-side tokenize/explode/aggregate mirrors the batch index
-  build expression-for-expression (``stream_postings`` below; the parity
-  is pinned by ``TestIncrementalIndex``, which asserts streamed and
-  batch-built postings are row-identical for the same rows — keep both
-  sides in sync when touching either). Global stats (df_t, avgdl) are NOT
+  ``stream_postings`` below builds them with the batch index build's own
+  tokenize/explode/aggregate (``functions/analyzers.py::postings_rows``;
+  ``TestIncrementalIndex`` asserts streamed and batch-built postings are
+  row-identical for the same rows). Global stats (df_t, avgdl) are NOT
   maintained per-microbatch (a streaming global aggregate would rewrite
   the whole stats table every batch); they are recomputed lazily from the
   postings table at query time — the classic refresh-on-read tradeoff.
@@ -28,7 +27,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from sparksearchengine_spark.functions.analyzers import analyzer_expr
+from sparksearchengine_spark.functions.analyzers import (
+    analyzer_expr,
+    explode_tokens,
+    postings_rows,
+)
 
 # standing-query term tables persisted by prepare_percolator, released by
 # release_percolator_caches() — mirrors SearchIndex._phrase_caches
@@ -159,31 +162,16 @@ def stream_postings(
     positions: bool = True,
 ) -> DataFrame:
     """Tokenize a document stream into per-batch postings rows — the
-    streaming half of ``Corpus.build_index`` (same expressions, same
-    output schema: field, term, doc_id, tf, dl, positions)."""
-    toks = F.coalesce(
-        analyzer_expr(F.col(field), analyzer), F.array().cast("array<string>")
-    )
-    exploded = docs_stream.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.size(toks).alias("dl"),
-        F.posexplode(toks).alias("pos", "term"),
-    )
-    agg_cols = [
-        F.count(F.lit(1)).cast("long").alias("tf"),
-        F.first("dl").cast("long").alias("dl"),
-        (
-            F.sort_array(F.collect_list("pos")).alias("positions")
-            if positions
-            else F.lit(None).cast("array<int>").alias("positions")
-        ),
-    ]
-    return (
-        exploded.groupBy("doc_id", "term")
-        .agg(*agg_cols)
-        .select(
-            F.lit(field).alias("field"), "term", "doc_id", "tf", "dl", "positions"
-        )
+    streaming half of ``Corpus.build_index``: the same ``postings_rows``
+    shape (field, term, doc_id, tf, dl, positions). Unlike the batch
+    build there is no doc_id repartition: each micro-batch tokenizes on
+    its own partitioning."""
+    return postings_rows(
+        docs_stream,
+        F.col(id_col).cast("long"),
+        analyzer_expr(F.col(field), analyzer),
+        field,
+        positions,
     )
 
 
@@ -456,31 +444,13 @@ def _index_over_postings(postings: DataFrame, corpus_df: DataFrame,
     the global termstats/fieldstats from it."""
     from sparksearchengine_spark.functions.analyzers import TextOptions
     from sparksearchengine_spark.functions.scoring import ScoringConfig
-    from sparksearchengine_spark.operators.index import (
-        Corpus,
-        FieldStats,
-        SearchIndex,
-    )
+    from sparksearchengine_spark.operators.index import Corpus, SearchIndex
 
-    termstats = postings.groupBy("field", "term").agg(
-        F.count(F.lit(1)).cast("long").alias("df_t")
-    )
-    stats_rows = (
-        postings.select("field", "doc_id", "dl").distinct()
-        .groupBy("field")
-        .agg(F.count(F.lit(1)).alias("doc_count"), F.avg("dl").alias("avgdl"))
-        .collect()
-    )
-    fieldstats = {
-        r["field"]: FieldStats(int(r["doc_count"]), float(r["avgdl"]))
-        for r in stats_rows
-    }
     corpus = Corpus(
         corpus_df, id_col=id_col, text_cols={field: TextOptions(analyzer=analyzer)}
     )
-    return SearchIndex(
-        corpus=corpus, postings=postings, termstats=termstats,
-        fieldstats=fieldstats, scoring=ScoringConfig(),
+    return SearchIndex._from_postings(
+        corpus, postings, ScoringConfig(), persist=False
     )
 
 
@@ -564,17 +534,12 @@ def prepare_percolator(
     the stream. The cache is registered in ``_percolator_caches``; call
     :func:`release_percolator_caches` once the streaming query
     terminates."""
-    toks = F.array_distinct(
-        analyzer_expr(F.col(query_text_col), analyzer)
-    )
-    out = (
-        queries_df.select(
-            F.col(query_id_col).alias("query_id"),
-            F.size(toks).alias("_nq"),
-            F.explode(toks).alias("term"),
-        )
-        .persist()
-    )
+    out = explode_tokens(
+        queries_df,
+        [F.col(query_id_col).alias("query_id")],
+        F.array_distinct(analyzer_expr(F.col(query_text_col), analyzer)),
+        "_nq",
+    ).persist()
     out.count()  # materialize: each micro-batch's match job reads the
     # registry from more than one stage (stage-race guard, r10)
     _percolator_caches.append(out)
@@ -621,11 +586,10 @@ def percolate_stream(
     )
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        toks = F.array_distinct(
-            analyzer_expr(F.col(text_col), analyzer)
-        )
-        doc_terms = batch_df.select(
-            F.col(id_col).alias("doc_id"), F.explode(toks).alias("term")
+        doc_terms = explode_tokens(
+            batch_df,
+            [F.col(id_col).alias("doc_id")],
+            F.array_distinct(analyzer_expr(F.col(text_col), analyzer)),
         )
         from sparksearchengine_spark.operators.search import (
             _hint_data_side,

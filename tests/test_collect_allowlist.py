@@ -57,13 +57,12 @@ ALLOWLIST = {
             "1-row: two totals"),
     ("operators/dsir.py", "dsir_log_weights"):
         (1, "1-row: the bucket==-1 sentinel row"),
-    ("operators/index.py", "Corpus.build_index"):
-        (1, "per-field: doc_count/avgdl stats, one row per text field"),
-    ("operators/index.py", "merge_indexes"):
-        (1, "per-field: recomputed stats over the merged shards"),
+    ("operators/index.py", "SearchIndex._from_postings"):
+        (1, "per-field: doc_count/avgdl stats, one row per text field "
+            "(the one stats path of build, merge, upsert and the "
+            "streamed-postings index)"),
     ("operators/index.py", "upsert_index"):
-        (2, "per-field: refreshed stats; k-bounded: limit(1) duplicate "
-            "witness"),
+        (1, "k-bounded: limit(1) duplicate witness"),
     ("operators/joindsl.py", "_dsl_column_scored_union"):
         (1, "probed: bounded shape probe (limit(cap+1), loud error), "
             "memoized on the frame object"),
@@ -119,8 +118,6 @@ ALLOWLIST = {
         (1, "file-listing: one path row per WARC file (driver metadata "
             "pass; gzip files are the parallelism unit — shared by "
             "read_warc and the fused warc_outlink_edges)"),
-    ("streaming/stream.py", "_index_over_postings"):
-        (1, "per-field: doc_count/avgdl stats per text field"),
 }
 
 

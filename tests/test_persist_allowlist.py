@@ -128,14 +128,6 @@ ALLOWLIST = {
         "the totals/confusion branches (named in operators/cache.py's "
         "skip list)",
     ),
-    ("operators/index.py", "Corpus.build_index"): (
-        2,
-        "single-chain (postings): the stats_rows collect is the first "
-        "action and materializes it; fanout-tolerable (termstats): a "
-        "cold branch recomputes ONE partial agg over the cached "
-        "postings, never the tokenize pipeline — and the build entry "
-        "points count both frames at build time",
-    ),
     ("operators/index.py", "SearchIndex.collection_stats"): (
         1,
         "single-chain: per-call LM-scoring join is the only consumer; "
@@ -148,17 +140,14 @@ ALLOWLIST = {
         "chain; the phrase compiler's fan-out path wraps ITS frame in "
         "materialize() (plans/compiler.py stage-race guard, r10)",
     ),
-    ("operators/index.py", "merge_indexes"): (
+    ("operators/index.py", "SearchIndex._from_postings"): (
         2,
-        "single-chain (postings): stats_rows collect first; "
-        "fanout-tolerable (termstats): one partial agg over cached "
-        "postings — same shape as Corpus.build_index",
-    ),
-    ("operators/index.py", "upsert_index"): (
-        2,
-        "single-chain (postings): stats_rows collect first; "
-        "fanout-tolerable (termstats): one partial agg over cached "
-        "postings — same shape as Corpus.build_index",
+        "single-chain (postings): the stats_rows collect is the first "
+        "action and materializes it; fanout-tolerable (termstats): a "
+        "cold branch recomputes ONE partial agg over the cached "
+        "postings, never the tokenize pipeline — and the build entry "
+        "points count both frames at build time. The one stats path "
+        "of build_index, merge_indexes and upsert_index",
     ),
     ("operators/joindsl.py", "prepare_dsl_queries"): (
         1,
