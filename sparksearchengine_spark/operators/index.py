@@ -407,9 +407,13 @@ class SearchIndex:
             TERM_BUCKET
         )
 
-    def _score_postings_frame(self, field: str, p: DataFrame) -> DataFrame:
+    def _score_postings_frame(
+        self, field: str, p: DataFrame, positions: bool = False
+    ) -> DataFrame:
         """tscore computation over a given postings frame — shared by the
-        cached full-field path and the bucket-pruned terms-as-data path."""
+        cached full-field path, the bucket-pruned terms-as-data path and
+        (``positions=True``: (doc_id, term, positions, tscore)) the DSL
+        phrase tier, whose phrase terms are data, not literals."""
         fs = self.fieldstats[field]
         ts = self.termstats.where(F.col("field") == field).select(
             "term", "df_t"
@@ -417,9 +421,9 @@ class SearchIndex:
         if self.scoring.needs_cf:
             # LM similarities: ride cf_t on the same vocab-sized side
             ts = ts.join(self.collection_stats(field), "term")
+        keep = [DOC_ID, "term", "positions"] if positions else ["term", DOC_ID]
         return p.join(self.hint_vocab_side(ts), "term").select(
-            "term",
-            DOC_ID,
+            *keep,
             self.scoring.term_score(
                 F.col("tf").cast("double"),
                 F.col("dl").cast("double"),

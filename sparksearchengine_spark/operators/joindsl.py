@@ -1,4 +1,5 @@
-"""E7 fully general — ``query_join_dsl``: per-row query ASTs as a COLUMN.
+"""E7 fully general — ``query_join_dsl``: per-row query ASTs as a COLUMN,
+and THE DSL executor every batch DSL surface runs through.
 
 The reference's ``queryJoin(other, queryGenerator: U => DslQuery, k)``
 (`SearchableRDD.scala:259-269`) accepts an arbitrary function producing a
@@ -6,52 +7,64 @@ STRUCTURALLY DIFFERENT query per row of ``other``. `search.query_join`
 covers the dominant shape (analyzed text + per-row attribute filters as
 data); this module closes the rest: each row of ``other`` carries its
 whole query tree, serialized by `plans.serde.query_to_json`, and the
-executor shape-groups the trees exactly like `batch_search_dsl` groups a
-driver-side list — except the grouping happens ON THE CLUSTER, so a
-100 M-row ``other`` never ships its queries to the driver.
+executor shape-groups the trees ON THE CLUSTER, so a 100 M-row
+``other`` never ships its queries to the driver.
 
-Execution tiers (same families as `search._dsl_scored_union`):
+The reference's ``batchSearch(Iterable[(Long, DslQuery)])``
+(`SearchableRDD.scala:194-197`) is the same capability over a driver
+list: `search.batch_search_dsl`, `search.percolate_dsl` and
+`streaming.percolate_stream_dsl` normalize their list in the driver
+(`search._dsl_scored_union`) into the same shape records and run the
+same tiers (:func:`_dsl_tiers`) over it as a small broadcast table.
+One normalizer (:func:`_normalize_tree`), one tier builder.
+
+Execution tiers:
 
 * **weighted-term shapes** (matchTerm / matchAll / matchAny / matchMin /
-  matchText / Boost / Or-of-those) — normalized per row by an Arrow
-  pandas UDF running the SAME `weighted_terms_cfg` logic the batch
-  executor uses, then ONE join of the exploded (query_id, field, term,
-  weight) rows against the cached scored postings + a min_match count
-  filter. Unbounded rows, zero driver involvement.
+  matchText / Boost / Or-of-those) — normalized per tree by the SAME
+  `weighted_terms_cfg` logic `search.explain_scores` uses, then ONE
+  join of the exploded (query_id, field, term, weight) rows against
+  the cached scored postings + a min_match count filter. Unbounded
+  rows, zero driver involvement.
 * **And(term-class, simple filters)** — the term rows ride the shared
   plan above; filters group by STRUCTURAL SIGNATURE (field/op/value
-  class, value abstracted into data columns). Only the ≤ ``max_plans``
-  DISTINCT signatures reach the driver; per-row comparison VALUES stay
-  a column. Numeric values compare as double (ints outside the exact-
-  double range ±2^53 route to the compiled tier, enforced in `_num`),
-  string values in their natural type; other value types (bool, date,
-  Decimal, in-set) route to the compiled tier.
-* **phrases (exact + sloppy)** — per-row tokenization in the UDF emits
-  (qpos, term) rows + the span bound as data; the shared
-  positions-carrying postings join and the greedy-chain verifier are
-  `search._phrase_verify_branch` — the same physical plan as the batch
-  path. Unbounded rows. On a ``save(term_buckets=n)`` layout every data
-  tier (terms, phrases, patterns) prunes the postings scan to the
-  buckets its terms touch: ``crc32(term) % n`` is derived on the QUERY
-  side and semi-joined against the ``_tbucket`` partition column, which
-  Spark's dynamic partition pruning turns into a runtime
-  PartitionFilter (`SearchIndex.prune_term_buckets`) — terms-as-data no
-  longer forfeits the bucketed layout.
-* **multi-term (wildcard / regex / fuzzy)** — DISTINCT patterns (probed
-  ≤ ``max_patterns``, loud error beyond) intersect the vocabulary in
+  class, value abstracted into data columns) and dispatch per row in
+  ONE branch. Only the ≤ ``max_plans`` DISTINCT signatures reach the
+  driver; per-row comparison VALUES stay a column. Compare, range and
+  in-set values compare as double when numeric (ints outside the
+  exact-double range ±2^53 route to the compiled tier, enforced in
+  `_num`), in their natural type when strings; other value types
+  (None, bool, date, datetime, Decimal, mixed) route to the compiled
+  tier.
+* **phrases (exact + sloppy)** — per-tree tokenization emits (qpos,
+  term) rows + the span bound as data; the shared positions-carrying
+  postings join and the greedy-chain verifier are
+  `search._phrase_verify_branch`. Unbounded rows. On a
+  ``save(term_buckets=n)`` layout every data tier (terms, phrases,
+  patterns) prunes the postings scan to the buckets its terms touch:
+  ``crc32(term) % n`` is derived on the QUERY side and semi-joined
+  against the ``_tbucket`` partition column, which Spark's dynamic
+  partition pruning turns into a runtime PartitionFilter
+  (`SearchIndex.prune_term_buckets`) — terms-as-data no longer
+  forfeits the bucketed layout.
+* **multi-term (wildcard / regex / fuzzy)** — DISTINCT patterns
+  (≤ ``max_patterns``, loud error beyond) intersect the vocabulary in
   ONE scan, then fan matched terms back to query rows by pattern key.
-* **everything else** (Not, nested booleans, near, in-set filters, raw)
-  — grouped by the CANONICAL serialized form: N rows carrying equal
-  trees share one compiled plan, attached back by one join on the
-  canon string. Only ≤ ``max_plans`` distinct canons may exist (loud
-  error: restructure toward the data tiers or batch driver-side).
+* **everything else** (Not, nested booleans, near, the filters above,
+  raw) — grouped by plan key (a query column's CANONICAL serialized
+  form; a driver list's distinct trees): N rows carrying equal trees
+  share one compiled plan, attached back by one join on the key. Only
+  ≤ ``max_plans`` distinct keys may exist, counted together with the
+  filter signatures (loud error: restructure toward the data tiers or
+  split the batch).
 
-Scores are identical to `batch_search_dsl` / `search` for every tier
-(same cached per-posting floats, same fold shapes).
+Scores are identical to `search` for every tier (same cached
+per-posting floats, same fold shapes).
 
 Reference parity: `SearchableRDD.scala:259-269` (queryJoin with
-queryGenerator), `PartitionsIndexLuceneRDD.scala:273` (the cartesian
-this design avoids).
+queryGenerator), `SearchableRDD.scala:194-197` (batchSearch),
+`PartitionsIndexLuceneRDD.scala:273` (the cartesian this design
+avoids).
 """
 
 from __future__ import annotations
@@ -94,7 +107,8 @@ _NORM_SCHEMA = (
     " mt_field string, mt_kind string, mt_pat string, mt_edits int,"
     " fsig string,"
     " fvals array<struct<v_num:double,v_str:string,lo_num:double,"
-    "hi_num:double,lo_str:string,hi_str:string>>,"
+    "hi_num:double,lo_str:string,hi_str:string,"
+    "set_num:array<double>,set_str:array<string>>>,"
     " canon string, xkey string"
 )
 
@@ -124,6 +138,8 @@ _NOVAL = {
     "hi_num": None,
     "lo_str": None,
     "hi_str": None,
+    "set_num": None,
+    "set_str": None,
 }
 
 
@@ -144,11 +160,14 @@ def _num(v) -> bool:
 
 def _filter_slot(f, corpus_cols: "set[str]"):
     """(sig_string, value_dict) for one filter, or None when the filter
-    cannot ride the data path — mirrors `search._dsl_scored_union`'s
-    `_slot_sig`, with the value CLASS (num/str) in the signature so the
-    driver can build a typed predicate per signature while values stay
-    data. Fields containing the sig separators route to the compiled
-    tier (signature strings must parse unambiguously)."""
+    cannot ride the data path. The signature holds the filter kind, the
+    field, the operator and the value CLASS (num/str), so the driver
+    builds one typed predicate per signature (`_sig_predicate_expr`)
+    while the values stay data. Only num (int/float, see `_num`) and str
+    values ride: None, bool, date, datetime, Decimal, mixed-class or
+    empty in-sets route to the compiled tier. Fields containing the sig
+    separators route there too (signature strings must parse
+    unambiguously)."""
     from sparksearchengine_spark.plans import ast
 
     def _ok_field(name: str) -> bool:
@@ -178,6 +197,18 @@ def _filter_slot(f, corpus_cols: "set[str]"):
                 **_NOVAL, "lo_str": f.lo, "hi_str": f.hi
             }
         return None
+    if isinstance(f, ast.InSetFilter):
+        if not _ok_field(f.field) or not f.values:
+            return None
+        if all(_num(v) for v in f.values):
+            return f"in:{f.field}:num", {
+                **_NOVAL, "set_num": [float(v) for v in f.values]
+            }
+        if all(isinstance(v, str) for v in f.values):
+            return f"in:{f.field}:str", {
+                **_NOVAL, "set_str": list(f.values)
+            }
+        return None
     if isinstance(f, ast.ExistsFilter):
         return (f"exists:{f.field}", dict(_NOVAL)) if _ok_field(f.field) else None
     if isinstance(f, ast.MissingFilter):
@@ -185,19 +216,15 @@ def _filter_slot(f, corpus_cols: "set[str]"):
     return None
 
 
-def _normalize_one(
-    js: "str | None",
-    text_cols: dict,
-    corpus_cols: "set[str]",
-    syntax: str = "json",
-    default_field: str = "text",
-) -> dict:
-    """Shape-classify ONE serialized query — the per-row normalization
-    the Arrow UDF maps over the query column. Pure function of small
-    driver-shipped config; returns a record matching `_NORM_SCHEMA`.
-    ``syntax='json'`` decodes `plans.serde` trees; ``syntax='lucene'``
-    parses Lucene-ish saved-search strings via `plans.parser` (the Q12
-    grammar), per row, on the executors."""
+def _normalize_tree(q, text_cols: dict, corpus_cols: "set[str]") -> dict:
+    """Shape-classify ONE query tree into a `_NORM_SCHEMA` record (the
+    ``canon`` / ``xkey`` keys left unset): which execution tier runs it
+    and the data that tier needs. Pure function of small config, so the
+    query-column UDF (:func:`_normalize_one`, per row on the executors)
+    and the driver-list adapter (`search._dsl_scored_union`, per tree in
+    the driver) classify through the same code. A tree the engine
+    rejects (unknown field, phrase on a positions=False column) becomes
+    an ``error`` record carrying the message."""
     from sparksearchengine_spark.functions.analyzers import tokenize_py
     from sparksearchengine_spark.plans import ast
     from sparksearchengine_spark.plans.compiler import (
@@ -205,44 +232,8 @@ def _normalize_one(
         _folds_case,
         _wildcard_to_like,
     )
-    from sparksearchengine_spark.plans.serde import (
-        query_from_json,
-        query_to_json,
-    )
-
-    import hashlib
 
     out = dict(_EMPTY_NORM)
-    if js is None:
-        out["shape"] = "empty"
-        return out
-    try:
-        if syntax == "lucene":
-            from sparksearchengine_spark.plans.parser import parse_query
-
-            q = parse_query(js, default_field)
-        else:
-            q = query_from_json(js)
-    except ValueError as e:
-        out["shape"] = "error"
-        out["err"] = str(e)
-        return out
-
-    # execution key: sha256 of the canonical tree — rows carrying EQUAL
-    # trees share it, so dedup_queries can execute once per distinct
-    # query (a zipfian log's hot query costs one execution, not one per
-    # occurrence). Collision-resistant on purpose: a hash collision
-    # between two distinct trees would silently merge their results,
-    # and the canonical string is already computed per row so the
-    # stronger hash costs nothing extra.
-    out["xkey"] = hashlib.sha256(
-        query_to_json(q).encode("utf-8")
-    ).hexdigest()
-
-    def _general() -> dict:
-        out["shape"] = "general"
-        out["canon"] = query_to_json(q)
-        return out
 
     def _terms(rows, mm, fsig="", fvals=None) -> dict:
         if not rows:
@@ -331,11 +322,13 @@ def _normalize_one(
                         fsig="|".join(s for s, _ in ordered),
                         fvals=[v for _, v in ordered],
                     )
-            return _general()
+            out["shape"] = "general"
+            return out
         tw = weighted_terms_cfg(text_cols, q)
         if tw is not None:
             return _terms(tw[0], tw[1])
-        return _general()
+        out["shape"] = "general"
+        return out
     except ValueError as e:
         out = dict(_EMPTY_NORM)
         out["shape"] = "error"
@@ -343,56 +336,59 @@ def _normalize_one(
         return out
 
 
-def _positions_scored(
-    index: "SearchIndex",
-    field: str,
-    prune_terms: "DataFrame | None" = None,
-) -> DataFrame:
-    """(doc_id, term, positions, tscore) for EVERY term of ``field`` —
-    `plans.compiler._scored_postings` without the driver-known term
-    restriction (the phrase terms here are data, not literals). The
-    termstats side broadcasts only when the vocab probe proves it small
-    (`SearchIndex.hint_vocab_side`), else shuffle_hash with the vocab as
-    build side — the postings side is never the build side.
+def _normalize_one(
+    js: "str | None",
+    text_cols: dict,
+    corpus_cols: "set[str]",
+    syntax: str = "json",
+    default_field: str = "text",
+) -> dict:
+    """Parse and shape-classify ONE serialized query — the per-row
+    normalization the Arrow UDF maps over the query column. Returns a
+    `_NORM_SCHEMA` record: :func:`_normalize_tree`'s, plus the canonical
+    serialized tree as ``canon`` (general shapes: the general tier's
+    plan key) and its sha256 as ``xkey``. ``syntax='json'`` decodes
+    `plans.serde` trees; ``syntax='lucene'`` parses Lucene-ish
+    saved-search strings via `plans.parser` (the Q12 grammar), per row,
+    on the executors."""
+    from sparksearchengine_spark.plans.serde import (
+        query_from_json,
+        query_to_json,
+    )
 
-    ``prune_terms`` (one ``term`` column, e.g. the phrase tier's
-    exploded terms): on a term-bucketed saved index, derives the query
-    side's bucket set and semi-joins it against the ``_tbucket``
-    partition column (`SearchIndex.prune_term_buckets`) so the scan
-    prunes to the touched buckets — terms-as-data no longer forfeits
-    the bucketed layout."""
-    fs = index.fieldstats[field]
-    spark = index.postings.sparkSession
-    if fs.doc_count == 0:
-        return spark.createDataFrame(
-            [],
-            "doc_id long, term string, positions array<int>,"
-            " tscore double",
-        )
-    p = index.prune_term_buckets(index.postings, prune_terms)
-    p = p.where(F.col("field") == field)
-    ts = index.termstats.where(F.col("field") == field).select(
-        "term", "df_t"
-    )
-    if index.scoring.needs_cf:
-        ts = ts.join(index.collection_stats(field), "term")
-    return p.join(index.hint_vocab_side(ts), "term").select(
-        F.col(DOC_ID),
-        F.col("term"),
-        F.col("positions"),
-        index.scoring.term_score(
-            F.col("tf").cast("double"),
-            F.col("dl").cast("double"),
-            F.col("df_t").cast("double"),
-            float(fs.doc_count),
-            fs.avgdl,
-            cf_t=(
-                F.col("cf_t").cast("double")
-                if index.scoring.needs_cf
-                else None
-            ),
-        ).alias("tscore"),
-    )
+    import hashlib
+
+    out = dict(_EMPTY_NORM)
+    if js is None:
+        out["shape"] = "empty"
+        return out
+    try:
+        if syntax == "lucene":
+            from sparksearchengine_spark.plans.parser import parse_query
+
+            q = parse_query(js, default_field)
+        else:
+            q = query_from_json(js)
+    except ValueError as e:
+        out["shape"] = "error"
+        out["err"] = str(e)
+        return out
+
+    out = _normalize_tree(q, text_cols, corpus_cols)
+    if out["shape"] == "error":
+        return out
+    canon = query_to_json(q)
+    # execution key: sha256 of the canonical tree — rows carrying EQUAL
+    # trees share it, so dedup_queries can execute once per distinct
+    # query (a zipfian log's hot query costs one execution, not one per
+    # occurrence). Collision-resistant on purpose: a hash collision
+    # between two distinct trees would silently merge their results,
+    # and the canonical string is already computed per row so the
+    # stronger hash costs nothing extra.
+    out["xkey"] = hashlib.sha256(canon.encode("utf-8")).hexdigest()
+    if out["shape"] == "general":
+        out["canon"] = canon
+    return out
 
 
 def _attach_elements(out: DataFrame, c, with_elements: bool) -> DataFrame:
@@ -414,8 +410,8 @@ def _attach_elements(out: DataFrame, c, with_elements: bool) -> DataFrame:
 
 def _sig_predicate_expr(sig: str):  # type: ignore[no-untyped-def]
     """One signature group's filter slots as a single Column predicate:
-    slot i's typed values live at fvals[i] (the UDF sorted slots by
-    signature string, so the order is deterministic). The
+    slot i's typed values live at fvals[i] (`_normalize_tree` sorted
+    slots by signature string, so the order is deterministic). The
     field/op/class are FIXED per signature — only the comparison values
     are data. Expression form (not sequential .where) so signatures
     can dispatch per row inside ONE branch via fsig equality."""
@@ -445,6 +441,15 @@ def _sig_predicate_expr(sig: str):  # type: ignore[no-untyped-def]
                 )
             else:
                 conds.append(att.between(val["lo_str"], val["hi_str"]))
+        elif kind == "in":
+            if parts[2] == "num":
+                conds.append(
+                    F.array_contains(val["set_num"], att.cast("double"))
+                )
+            else:
+                conds.append(
+                    F.array_contains(val["set_str"], att.cast("string"))
+                )
         elif kind == "exists":
             conds.append(att.isNotNull())
         else:  # missing
@@ -509,10 +514,6 @@ def query_join_dsl(
     registry). Must have been prepared from THIS ``other`` frame with
     the same id/query columns; caller owns its cache.
     """
-    if query_col not in other.columns:
-        raise ValueError(
-            f"query_col {query_col!r} not in other ({other.columns})"
-        )
     if other_id_col is None:
         if prepared is not None:
             raise ValueError(
@@ -787,8 +788,10 @@ def _dsl_column_scored_union(
     """(normalized frame, (query_id, doc_id, score) union-or-None) for a
     frame carrying serialized query trees — the shared core of
     `query_join_dsl` (top-k join-back) and `percolate_dsl_df` (all
-    matches). The normalized frame is persisted and registered on the
-    index; the union is None when no execution tier has any rows.
+    matches). Normalizes the column on the executors, summarizes it
+    with one bounded probe and hands both to :func:`_dsl_tiers`. The
+    normalized frame is persisted and registered on the index; the
+    union is None when no execution tier has any rows.
 
     ``dedup_queries``: execute once per DISTINCT canonical tree — the
     union's query_id column then carries the sha256 execution key (the
@@ -803,7 +806,6 @@ def _dsl_column_scored_union(
     if max_plans < 1 or max_patterns < 1:
         raise ValueError("max_plans and max_patterns must be >= 1")
     c = index.corpus
-    text_cols = dict(c.text_cols)
 
     if prepared is not None:
         # caller-owned normalized frame (prepare_dsl_queries): reused
@@ -836,17 +838,13 @@ def _dsl_column_scored_union(
     else:
         exe = nz
 
-    # -- ONE bounded probe: shape presence, first error, distinct filter
-    # signatures, distinct general canons, and the distinct FIELDS each
-    # data tier touches (the join key `field` is data, so Catalyst
-    # cannot prune union branches — the probe prunes them instead: each
-    # tier's scored-postings union is built only over its present
-    # fields). Group count is bounded when the batch is within budget
-    # (sigs + canons <= max_plans plus <= 5 singleton shape groups, each
-    # multiplied by at most |text_cols|+1 field rows), so hitting the
-    # cap means over budget.
+    # -- ONE bounded probe: the (shape, fsig, canon, fld) groups
+    # `_summarize` reads. Group count is bounded when the batch is within
+    # budget (sigs + canons <= max_plans plus <= 5 singleton shape
+    # groups, each multiplied by at most |text_cols|+1 field rows), so
+    # hitting the cap means over budget.
     probe_cap = 2 * max_plans + 8
-    nfields = len(text_cols) + 1
+    nfields = len(c.text_cols) + 1
     row_fields = (
         F.when(
             F.col("shape") == "terms",
@@ -886,42 +884,110 @@ def _dsl_column_scored_union(
         )
         if prepared is not None:
             prepared._ssq_probe_cache = (max_plans, groups)
+    summary = _summarize(groups, op_name, max_plans, cap=probe_cap)
+
+    if "mt" in summary["shapes"]:
+        npats = (
+            exe.where(F.col("shape") == "mt")
+            .select("mt_field", "mt_kind", "mt_pat", "mt_edits")
+            .distinct()
+            .limit(max_patterns + 1)
+            .count()
+        )
+        _check_patterns(npats, max_patterns)
+
+    from sparksearchengine_spark.plans.serde import query_from_json
+
+    plans = {cn: query_from_json(cn) for cn in summary["canons"]}
+    return nz, _dsl_tiers(
+        index, exe, other, summary, broadcast_queries, plans
+    )
+
+
+def _summarize(
+    groups, op_name: str, max_plans: int, cap: "int | None" = None
+) -> dict:
+    """The group summary :func:`_dsl_tiers` plans from, out of the
+    distinct (shape, fsig, canon, fld, err) groups of a normalized query
+    set — the bounded probe's rows for a query column, a Python list for
+    a driver list. Raises the first error group as ``ValueError``, and
+    raises when the distinct filter signatures plus distinct general
+    trees exceed ``max_plans`` (each costs a plan branch). ``cap``: the
+    probe's row cap — a probe that hit it saw only part of the set, so
+    the set is over budget.
+
+    Summary keys: ``shapes`` present; ``plain_terms`` (any unfiltered
+    terms row); ``sigs`` and ``canons`` (sorted distinct filter
+    signatures and general plan keys); ``terms`` / ``phrase`` / ``mt``:
+    the sorted fields each data tier's rows touch. The join key
+    ``field`` is data, so Catalyst cannot prune union branches: each
+    tier's scored-postings union is built only over these fields."""
     triples = {(g["shape"], g["fsig"], g["canon"]) for g in groups}
-    over_budget = len(triples) >= probe_cap
+    over_budget = cap is not None and len(triples) >= cap
     if not over_budget:
         for g in groups:
             if g["shape"] == "error":
                 raise ValueError(f"{op_name}: {g['err']}")
-    sigs = sorted(
-        {t[1] for t in triples if t[0] == "terms" and t[1]}
-    )
+    sigs = sorted({t[1] for t in triples if t[0] == "terms" and t[1]})
     canons = sorted({t[2] for t in triples if t[0] == "general"})
-    shapes_present = {t[0] for t in triples}
-    has_plain_terms = any(
-        t[0] == "terms" and t[1] == "" for t in triples
-    )
-    # normalization already validated every field against text_cols, so
-    # these are subsets of the declared searchable columns
-    term_fields = sorted(
-        {g["fld"] for g in groups if g["shape"] == "terms" and g["fld"]}
-    )
-    mt_fields = sorted(
-        {g["fld"] for g in groups if g["shape"] == "mt" and g["fld"]}
-    )
-    ph_used = sorted(
-        {g["fld"] for g in groups if g["shape"] == "phrase" and g["fld"]}
-    )
     if over_budget or len(sigs) + len(canons) > max_plans:
+        more = "+" if over_budget else ""
         raise ValueError(
-            f"query column carries >{max_plans} plan-costing shapes "
-            f"({len(sigs)}+ filter signatures, {len(canons)}+ distinct "
-            "non-data query trees); each costs a plan branch. Raise "
-            "max_plans, restructure queries toward the data tiers "
-            "(term classes, phrases, patterns, simple filters), or "
-            "batch driver-side with batch_search_dsl."
+            f"{op_name}: more than max_plans={max_plans} plan-costing "
+            f"shapes ({len(sigs)}{more} filter signatures, "
+            f"{len(canons)}{more} distinct non-data query trees); each "
+            "costs a plan branch. Raise max_plans, restructure queries "
+            "toward the data tiers (term classes, phrases, patterns, "
+            "num/str filters), or split the batch."
         )
 
+    def _fields(shape: str) -> "list[str]":
+        # normalization already validated every field against
+        # text_cols, so these are subsets of the searchable columns
+        return sorted(
+            {g["fld"] for g in groups if g["shape"] == shape and g["fld"]}
+        )
+
+    return {
+        "shapes": {t[0] for t in triples},
+        "plain_terms": any(t[0] == "terms" and t[1] == "" for t in triples),
+        "sigs": sigs,
+        "canons": canons,
+        "terms": _fields("terms"),
+        "phrase": _fields("phrase"),
+        "mt": _fields("mt"),
+    }
+
+
+def _check_patterns(npats: int, max_patterns: int) -> None:
+    if npats > max_patterns:
+        raise ValueError(
+            f"more than max_patterns={max_patterns} distinct "
+            "wildcard/regex/fuzzy patterns — each evaluates against "
+            "every vocabulary term; dedupe the query rows or split."
+        )
+
+
+def _dsl_tiers(
+    index: "SearchIndex",
+    exe: DataFrame,
+    other: "DataFrame | None",
+    summary: dict,
+    broadcast_queries: "bool | None",
+    plans: dict,
+) -> "DataFrame | None":
+    """THE DSL executor: (query_id, doc_id, score) matches of every
+    normalized query in ``exe`` (`_NORM_SCHEMA` rows plus ``query_id``),
+    or None when no tier has rows. Both entry shapes run through it —
+    a query column (`_dsl_column_scored_union`) and a driver list
+    (`search._dsl_scored_union`) — planned from the ``summary``
+    (:func:`_summarize`). ``broadcast_queries``: True/False forces the
+    query-side join strategy; None decides by ``other``'s size
+    (`search._hint_query_side`). ``plans`` maps each general-shape plan
+    key (the ``canon`` column) to the AST compiled for it."""
+    c = index.corpus
     branches: "list[DataFrame]" = []
+    shared: dict = {}
 
     def _scored_union(
         flds: "list[str]",
@@ -929,11 +995,10 @@ def _dsl_column_scored_union(
         tier: str = "",
     ) -> DataFrame:
         # union of the cached scored postings of exactly the fields the
-        # probe saw in this tier's rows — the join key `field` is data,
-        # so Catalyst cannot prune union branches; the probe already
-        # can, and a one-field batch over a ten-field corpus must scan
-        # one field's postings, not ten. Memoized per (field SET, tier)
-        # so tiers touching the same fields share the frame.
+        # summary saw in this tier's rows — a one-field batch over a
+        # ten-field corpus scans one field's postings, not ten.
+        # Memoized per (field SET, tier) so tiers touching the same
+        # fields share the frame.
         # ``prune_terms`` (a (field, term) frame — this tier's query
         # terms): on a term-bucketed saved index the per-field scan
         # semi-joins the query side's derived bucket set against the
@@ -951,7 +1016,7 @@ def _dsl_column_scored_union(
             for f in flds:
                 pt = (
                     prune_terms.where(F.col("field") == f).select("term")
-                    if prune_terms is not None and index.term_buckets
+                    if prunes
                     else None
                 )
                 one = index.scored_postings(f, prune_terms=pt).withColumn(
@@ -961,10 +1026,9 @@ def _dsl_column_scored_union(
             shared[key] = sp
         return shared[key]
 
-    shared: dict = {}
-
+    sigs = summary["sigs"]
     # -- tier 1: weighted terms (+ per-signature filters) ------------------
-    if has_plain_terms or sigs:
+    if summary["plain_terms"] or sigs:
         tq = exe.where(F.col("shape") == "terms").select(
             "query_id",
             F.col("min_match").alias("_minm"),
@@ -979,7 +1043,7 @@ def _dsl_column_scored_union(
         qside = _hint_query_side(tq, other, broadcast_queries)
         agg = (
             _scored_union(
-                term_fields,
+                summary["terms"],
                 prune_terms=tq.select("field", "term"),
                 tier="terms",
             ).join(qside, ["field", "term"])
@@ -1025,7 +1089,7 @@ def _dsl_column_scored_union(
             sub = tm.join(attrs, DOC_ID)
             pred = (
                 F.col("fsig") == ""
-                if has_plain_terms
+                if summary["plain_terms"]
                 else F.lit(False)
             )
             for sig in sigs:
@@ -1037,11 +1101,10 @@ def _dsl_column_scored_union(
             )
 
     # -- tier 2: phrases as data -------------------------------------------
-    # probe-pruned: only fields a phrase row actually names (normalization
-    # already rejected phrases on positions=False columns, so every used
-    # field carries positions)
-    ph_fields = ph_used
-    if "phrase" in shapes_present and ph_fields:
+    # only fields a phrase row actually names (normalization already
+    # rejected phrases on positions=False columns, so every used field
+    # carries positions)
+    if summary["phrase"]:
         pq = exe.where(F.col("shape") == "phrase").select(
             "query_id",
             F.col("ph_field").alias("field"),
@@ -1050,11 +1113,16 @@ def _dsl_column_scored_union(
             F.posexplode("ph_terms").alias("qpos", "term"),
         )
         pp = None
-        for f in ph_fields:
-            one = _positions_scored(
-                index,
-                f,
-                prune_terms=pq.where(F.col("field") == f).select("term"),
+        for f in summary["phrase"]:
+            # every posting of the field with its positions and tscore
+            # (the phrase terms are data, not literals); on a bucketed
+            # layout pruned to the buckets the phrase terms touch
+            p = index.prune_term_buckets(
+                index.postings,
+                pq.where(F.col("field") == f).select("term"),
+            ).where(F.col("field") == f)
+            one = index._score_postings_frame(
+                f, p, positions=True
             ).withColumn("field", F.lit(f))
             pp = one if pp is None else pp.unionByName(one)
         joined = pp.join(
@@ -1064,7 +1132,7 @@ def _dsl_column_scored_union(
         branches.append(_phrase_verify_branch(joined))
 
     # -- tier 3: multi-term patterns, deduped, one vocabulary scan ---------
-    if "mt" in shapes_present:
+    if summary["mt"]:
         mtq = exe.where(F.col("shape") == "mt").select(
             "query_id",
             F.col("mt_field").alias("field"),
@@ -1072,18 +1140,12 @@ def _dsl_column_scored_union(
             F.col("mt_pat").alias("pat"),
             F.col("mt_edits").alias("edits"),
         )
+        # distinct patterns, capped by the caller (_check_patterns)
         pats = mtq.select("field", "kind", "pat", "edits").distinct()
-        npats = pats.limit(max_patterns + 1).count()
-        if npats > max_patterns:
-            raise ValueError(
-                f"more than max_patterns={max_patterns} distinct "
-                "wildcard/regex/fuzzy patterns — each evaluates against "
-                "every vocabulary term; dedupe the query rows or split."
-            )
         # field pushdown at the termstats scan: patterns only evaluate
-        # against the vocabularies of fields the probe saw in mt rows
+        # against the vocabularies of fields the summary saw in mt rows
         vocab = index.termstats.select("field", "term").where(
-            F.col("field").isin(mt_fields)
+            F.col("field").isin(summary["mt"])
         )
         hit = (
             (F.col("kind") == "like") & F.expr("term like pat")
@@ -1113,7 +1175,7 @@ def _dsl_column_scored_union(
         ).select("query_id", "field", "term")
         branches.append(
             _scored_union(
-                mt_fields,
+                summary["mt"],
                 prune_terms=matched.select("field", "term"),
                 tier="mt",
             ).join(
@@ -1125,10 +1187,9 @@ def _dsl_column_scored_union(
             .select("query_id", DOC_ID, F.lit(1.0).alias(SCORE))
         )
 
-    # -- tier 4: general shapes, one compiled plan per DISTINCT canon ------
+    # -- tier 4: general shapes, one compiled plan per DISTINCT tree -------
+    canons = summary["canons"]
     if canons:
-        from sparksearchengine_spark.plans.serde import query_from_json
-
         gids = exe.where(F.col("shape") == "general").select(
             "query_id", F.col("canon").alias("_canon")
         )
@@ -1159,16 +1220,16 @@ def _dsl_column_scored_union(
                 else gq.hint("shuffle_replicate_nl")
             )
             branches.append(
-                index.compile(query_from_json(canons[0]))
+                index.compile(plans[canons[0]])
                 .crossJoin(side)
                 .select("query_id", DOC_ID, SCORE)
             )
         else:
             cp = None
             for canon in canons:
-                compiled = index.compile(
-                    query_from_json(canon)
-                ).withColumn("_canon", F.lit(canon))
+                compiled = index.compile(plans[canon]).withColumn(
+                    "_canon", F.lit(canon)
+                )
                 cp = compiled if cp is None else cp.unionByName(compiled)
             branches.append(
                 cp.join(
@@ -1178,8 +1239,8 @@ def _dsl_column_scored_union(
             )
 
     if not branches:
-        return nz, None
+        return None
     unioned = branches[0]
     for b in branches[1:]:
         unioned = unioned.unionByName(b)
-    return nz, unioned
+    return unioned

@@ -500,8 +500,9 @@ def batch_search(
     return ranked.select("query_id", DOC_ID, SCORE, "rank")
 
 
-# comparison ops shared by the DSL batch's data-driven filter slots —
-# the same operator set as plans.compiler._filter_pred
+# comparison ops of the DSL executor's data-driven filter slots
+# (joindsl._sig_predicate_expr) — the same operator set as
+# plans.compiler._filter_pred
 _DSL_FILTER_OPS = {
     "=": lambda a, b: a == b,
     ">": lambda a, b: a > b,
@@ -526,66 +527,43 @@ def batch_search_dsl(
     The reference's ``batchSearch(Iterable[(Long, DslQuery)])`` accepts
     any query per id — phrases, booleans, filters included
     (`SearchableRDD.scala:194-197`; executed as a per-index loop,
-    `impl/LuceneIndex.scala:54-60`). This is that API with the loop
-    replaced by shape-grouped plans:
+    `impl/LuceneIndex.scala:54-60`). Here the list is a small query
+    table run through the one DSL executor, the same one
+    `joindsl.query_join_dsl` runs over a query column (the `joindsl`
+    module docstring describes the tiers). Each tree is normalized in
+    the driver and lands in one tier:
 
-    * **term-class queries** (matchTerm / matchAll / matchAny /
-      matchMin / matchText) become DATA — one shared plan: literal
-      ``(query_id, field, term, min_match)`` rows joined to the cached
-      scored postings, ``groupBy(query_id, doc_id)`` partial agg, a
-      matched-clause count filter, one per-query rank window. A
-      thousand term-class queries cost ONE join, exactly like
-      :func:`batch_search`.
-    * **phrases — exact AND sloppy — are ALSO data** — one shared plan
-      for any number of distinct phrases: literal ``(query_id, qpos,
-      term)`` rows (with the per-query span bound ``slop + n - 1`` as
-      a column) join the positions-carrying scored postings, docs
-      matching every phrase position survive a count filter, and one
-      ordered greedy position-chain HOF verifies per (query, doc) —
-      exactly the single-query plan's shape, with the offsets and span
-      bound as data instead of literals. The HOF runs on survivors
-      only (docs containing ALL the phrase's terms), never the corpus.
-      Phrases do NOT count toward ``max_plans``.
-    * **And(term-class, simple filters) is ALSO data** — filters
-      group by STRUCTURAL SIGNATURE (field / op / value type, value
-      abstracted): the term rows join the one shared plan and each
-      signature group applies its per-query comparison VALUES via one
-      doc-attribute join + one broadcast values join — a registry of
-      thousands of per-user "match X where attr op value" standing
-      queries costs one plan per distinct signature, not per query.
-      Signatures count toward ``max_plans``; filters with None/mixed-
-      type values, unknown fields, or negative operands fall back to
-      the compiled path.
-    * **multi-term queries (wildcard / regex / fuzzy) are ALSO data** —
-      the patterns broadcast into ONE vocabulary scan (the Lucene
-      term-dictionary intersection, batched: LIKE / anchored-rlike /
-      levenshtein evaluate on termstats rows, never postings), the
-      matched (query_id, term) pairs hash-join the shared scored
-      postings, and docs dedupe to the single-query path's constant
-      score 1.0. A registry of 100 saved wildcard alerts costs one
-      dictionary pass, not 100. They do NOT count toward
-      ``max_plans``.
-    * **every other shape** (near, other booleans, raw) compiles
-      through the
-      standard single-query compiler ONCE PER DISTINCT AST — duplicate
-      queries share a plan via a broadcast id-attach join — and the
-      k-bounded results union into the same final top-k window. Plan
-      count is bounded by ``max_plans`` distinct non-term shapes (loud
-      error beyond: split the batch, or precompile saved searches with
-      the percolator for corpus-scale standing-query sets).
+    * **weighted terms** (matchTerm / matchAll / matchAny / matchMin /
+      matchText, ``Boost`` of those, ``Or`` of min_match-1 operands)
+      — one join of all queries' term rows against the cached scored
+      postings, one aggregate, one min_match filter;
+    * **And(one term class, simple filters)** — the term rows join that
+      same plan; each filter's field / op / value class forms a
+      SIGNATURE and its values stay data. Compare, range and in-set
+      filters with int/float or str values ride here; None, bool,
+      date, datetime, Decimal and mixed-class values, unknown fields
+      and negated operands route to the compiled tier;
+    * **phrases** (exact and sloppy) — one positions join and one
+      greedy position-chain check for all of them;
+    * **wildcard / regex / fuzzy** — one vocabulary scan for all
+      distinct patterns (at most ``joindsl.MAX_DISTINCT_PATTERNS``),
+      constant score 1.0;
+    * **everything else** (near, other booleans, the filters above) —
+      compiled once per distinct tree, as given; equal trees share the
+      plan.
+
+    ``max_plans`` bounds distinct filter signatures plus distinct
+    compiled trees (loud ``ValueError`` beyond: split the batch, or use
+    :func:`streaming.prepare_percolator` for corpus-scale standing-query
+    sets). So ten trees differing only in an int/str filter value cost
+    one plan; ten differing in a date value cost ten.
 
     Scores are bit-identical to per-query ``search()`` for plain term
-    classes and phrases — term-class batching reuses the same cached
-    per-posting floats and the same distinct-term sum + min_match
-    threshold as the compiler's ``_term_set``, phrase scores left-fold
-    in qpos order like the compiler's chain. ``Boost`` over a term
-    class and ``Or`` trees whose operands all normalize with
-    min_match == 1 ALSO run as data (per-term weights, accumulated
-    across Or operands — the parsed ``foo bar^2 baz`` shape costs no
-    compiled plan); their scores equal ``search()`` at the engine's
-    6-dp results contract (``sum(ts)·w`` vs ``sum(ts·w)`` differ only
-    in the last ulp). Term sets carrying DUPLICATE clauses (min_match
-    weighting differs) route to the compiler path for exactness.
+    classes and phrases (the same cached per-posting floats, the same
+    sum and qpos-ordered fold); ``Boost`` / ``Or`` folds equal it at
+    the engine's 6-dp results contract (``sum(ts)·w`` vs
+    ``sum(ts·w)`` differ in the last ulp). Term sets with DUPLICATE
+    clauses route to the compiled tier for exactness.
 
     Returns ``(query_id, doc_id, score, rank)``; queries with no hits
     contribute no rows (same contract as `batch_search`).
@@ -612,7 +590,9 @@ def batch_search_dsl(
                 f"k_by_query ids not in the batch: {sorted(unknown)}"
             )
     kmax = max([k, *map(int, (k_by_query or {}).values())])
-    unioned = _dsl_scored_union(index, qlist, max_plans)
+    unioned = _dsl_scored_union(
+        index, qlist, max_plans, "batch_search_dsl"
+    )
     if unioned is None:
         ranked = spark.createDataFrame(
             [], f"query_id long, {DOC_ID} long, {SCORE} double, rank int"
@@ -649,7 +629,7 @@ def batch_search_parsed(
     "lucene-ish string")`` parses through `plans.parser.parse_query`
     (terms, phrases incl. slop, booleans, field:, boosts, ranges,
     wildcards, fuzzy, regex) and the resulting ASTs batch through the
-    shape-grouped executor. The saved-search registry a reference user
+    one DSL executor. The saved-search registry a reference user
     keeps as RawQuery strings (`QueryConstructor.scala`) runs in one
     call; parse errors raise up front naming the offending id."""
     from sparksearchengine_spark.plans.parser import parse_query
@@ -674,16 +654,21 @@ def percolate_dsl(
     "which docs rank best" (the Elasticsearch percolator contract,
     arbitrary query DSL included).
 
-    Same shape-grouped execution as :func:`batch_search_dsl` — term
-    classes and exact phrases run as data in shared plans, other shapes
-    once per distinct AST — so a registry of thousands of saved
-    searches (alerting, routing-by-topic) matches a document batch in a
-    bounded number of joins. Run it over a micro-batch index inside
-    ``foreachBatch`` for streams (`streaming.percolate_stream_dsl`),
-    or over any corpus slice for backfills.
+    Same executor, value-type routing and ``max_plans`` counting as
+    :func:`batch_search_dsl` (the one DSL executor that
+    `joindsl.percolate_dsl_df` runs over a query table): term classes,
+    simple filters, phrases and patterns run as data in shared plans,
+    other trees once per distinct tree, so a registry of thousands of
+    saved searches (alerting, routing-by-topic) matches a document
+    batch in a bounded number of joins. Run it over a micro-batch index
+    inside ``foreachBatch`` for streams
+    (`streaming.percolate_stream_dsl`), or over any corpus slice for
+    backfills.
     """
     spark = index.postings.sparkSession
-    unioned = _dsl_scored_union(index, list(queries), max_plans)
+    unioned = _dsl_scored_union(
+        index, list(queries), max_plans, "percolate_dsl"
+    )
     if unioned is None:
         return spark.createDataFrame(
             [], f"query_id long, {DOC_ID} long, {SCORE} double"
@@ -707,7 +692,9 @@ def weighted_terms(
       operands may span different fields (field rides per row).
     The classic parsed saved-search shape ``foo bar^2 baz`` thus
     joins the one data-driven plan instead of compiling its own.
-    Shared by the DSL batch executor and :func:`explain_scores`.
+    The DSL executor's normalizer (`joindsl._normalize_tree`) reads the
+    same logic through :func:`weighted_terms_cfg`;
+    :func:`explain_scores` calls this form.
     """
     return weighted_terms_cfg(index.corpus.text_cols, q)
 
@@ -717,9 +704,10 @@ def weighted_terms_cfg(
 ) -> "tuple[list[tuple[str, str, float]], int] | None":
     """:func:`weighted_terms` against a bare ``{field: TextOptions}``
     config instead of a live index — the part of the normalization that
-    needs no Spark state, so `joindsl.query_join_dsl`'s executor-side
-    Arrow UDF can run the SAME logic per row (single source of truth
-    for what counts as a weighted-term plan)."""
+    needs no Spark state, so `joindsl._normalize_tree` runs the SAME
+    logic per tree, in the driver for a list and in an executor-side
+    Arrow UDF for a query column (single source of truth for what
+    counts as a weighted-term plan)."""
     from sparksearchengine_spark.functions.analyzers import tokenize_py
     from sparksearchengine_spark.plans import ast
 
@@ -767,8 +755,8 @@ def weighted_terms_cfg(
 
 def _phrase_verify_branch(joined: DataFrame) -> DataFrame:
     """Phrase verification with per-query offsets and span bound as DATA
-    — shared by `_dsl_scored_union` (driver-listed phrases) and
-    `joindsl.query_join_dsl` (phrases extracted from a query COLUMN).
+    — the phrase tier of the DSL executor (`joindsl._dsl_tiers`), for
+    driver lists and query columns alike.
 
     ``joined`` carries (query_id, doc_id, qpos, positions, tscore, _n,
     _maxspan) — one row per (query phrase position × matching posting).
@@ -864,394 +852,66 @@ def _dsl_scored_union(
     index: "SearchIndex",
     qlist: "list[tuple[int, Query]]",
     max_plans: int,
+    op_name: str,
 ) -> DataFrame | None:
-    """(query_id, doc_id, score) matches for a list of (id, AST) pairs,
-    shape-grouped (see `batch_search_dsl`); None for an empty list.
-    Validates id uniqueness — the one contract both DSL surfaces
-    (`batch_search_dsl`, `percolate_dsl`) share."""
-    from sparksearchengine_spark.functions.analyzers import tokenize_py
-    from sparksearchengine_spark.plans import ast
+    """(query_id, doc_id, score) matches for a driver list of (id, AST)
+    pairs, or None when no tier has rows — the driver adapter of the one
+    DSL executor (`joindsl._dsl_tiers`, which `query_join_dsl` runs over
+    a query column). The list becomes a small query table: each tree is
+    normalized here in the driver (`joindsl._normalize_tree`), the group
+    summary is built in Python (no probe job), the budgets are checked
+    with ``len()``, and the records ride one broadcast local relation.
+    General trees compile as given (no serde round trip), so filter
+    values serde cannot encode keep working. Validates id uniqueness —
+    the one contract both DSL list surfaces share."""
+    from sparksearchengine_spark.operators.joindsl import (
+        _NORM_SCHEMA,
+        MAX_DISTINCT_PATTERNS,
+        _check_patterns,
+        _dsl_tiers,
+        _normalize_tree,
+        _summarize,
+    )
 
     ids = [qid for qid, _ in qlist]
     if len(set(ids)) != len(ids):
         raise ValueError("duplicate query ids in batch")
-    spark = index.postings.sparkSession
     if not qlist:
         return None
-
-    def _as_weighted(q):  # type: ignore[no-untyped-def]
-        return weighted_terms(index, q)
-
-    def _slot_sig(f) -> "tuple | None":
-        """Structural signature of one filter — field, op, and VALUE
-        TYPE with the value itself abstracted — or None when the
-        filter cannot ride the data path (unknown corpus field,
-        None/mixed-type values)."""
-        fields = index.corpus.df.columns
-        if isinstance(f, ast.CompareFilter):
-            if f.field not in fields or f.value is None:
-                return None
-            return ("cmp", f.field, f.op, type(f.value).__name__)
-        if isinstance(f, ast.RangeFilter):
-            if f.field not in fields or f.lo is None or f.hi is None:
-                return None
-            return (
-                "range",
-                f.field,
-                type(f.lo).__name__,
-                type(f.hi).__name__,
-            )
-        if isinstance(f, ast.InSetFilter):
-            tns = {type(v).__name__ for v in f.values}
-            if f.field not in fields or len(tns) != 1 or None in f.values:
-                return None
-            return ("in", f.field, next(iter(tns)))
-        if isinstance(f, ast.ExistsFilter):
-            return ("exists", f.field) if f.field in fields else None
-        if isinstance(f, ast.MissingFilter):
-            return ("missing", f.field) if f.field in fields else None
-        return None
-
-    # (query_id, field, term, weight, min_match)
-    term_rows: list[tuple[int, str, str, float, int]] = []
-    # filter-signature -> [(query_id, filters sorted by slot sig)];
-    # queries here ALSO contribute term_rows — their candidates come
-    # from the one shared term plan, then the group's filters apply
-    filtered_groups: "dict[tuple, list[tuple[int, list]]]" = {}
-    filtered_ids: set = set()
-    # (query_id, field, n_positions, max_span, qpos, term) — phrases
-    # (exact AND sloppy: slop rides as the per-query span bound) as data
-    phrase_rows: list[tuple[int, str, int, int, int, str]] = []
-    # (query_id, field, kind, pattern, edits) — multi-term queries
-    # (wildcard/regex/fuzzy) as data: ONE vocabulary scan expands every
-    # pattern (Lucene's term-dictionary intersection, batched)
-    mt_rows: list[tuple[int, str, str, str, int]] = []
-    general: dict = {}  # ast -> [query_ids] (frozen dataclasses hash)
+    c = index.corpus
+    text_cols, corpus_cols = dict(c.text_cols), set(c.df.columns)
+    keys: dict[str, str] = {}  # repr(tree) -> general plan key
+    plans: dict = {}  # general plan key -> tree
+    recs, groups = [], []
     for qid, q in qlist:
-        if isinstance(q, ast.MatchPhrase):
-            opts = index.corpus.text_cols.get(q.field)
-            if opts is None:
-                raise ValueError(
-                    f"field {q.field!r} is not a searchable text column "
-                    f"(declared: {sorted(index.corpus.text_cols)})"
-                )
-            terms = tokenize_py(q.text, opts.query_time_analyzer())
-            if not terms:
-                continue  # analyzes to nothing: no hits
-            if len(terms) == 1:
-                term_rows.append((qid, q.field, terms[0], 1.0, 1))
-                continue
-            if not opts.positions:
-                raise ValueError(
-                    f"phrase query on field {q.field!r} requires "
-                    "positions=True (column was indexed with "
-                    "TextOptions(positions=False))"
-                )
-            max_span = q.slop + len(terms) - 1
-            for i, t in enumerate(terms):
-                phrase_rows.append(
-                    (qid, q.field, len(terms), max_span, i, t)
-                )
-            continue
-        if isinstance(
-            q, (ast.MatchWildcard, ast.MatchRegex, ast.MatchFuzzy)
-        ):
-            if q.field not in index.corpus.text_cols:
-                raise ValueError(
-                    f"field {q.field!r} is not a searchable text column"
-                    f" (declared: {sorted(index.corpus.text_cols)})"
-                )
-            from sparksearchengine_spark.plans.compiler import (
-                _folds_case,
-                _wildcard_to_like,
-            )
-
-            analyzer = index.corpus.text_cols[
-                q.field
-            ].query_time_analyzer()
-            folds = _folds_case(analyzer)
-            if isinstance(q, ast.MatchWildcard):
-                pat = q.pattern.lower() if folds else q.pattern
-                mt_rows.append(
-                    (qid, q.field, "like", _wildcard_to_like(pat), 0)
-                )
-            elif isinstance(q, ast.MatchRegex):
-                # NOT case-folded — regex metachars flip meaning under
-                # lower(); same contract as the single-query compiler
-                mt_rows.append(
-                    (qid, q.field, "re", f"^(?:{q.pattern})$", 0)
-                )
-            else:
-                t = q.term.lower() if folds else q.term
-                mt_rows.append((qid, q.field, "fz", t, q.max_edits))
-            continue
-        if isinstance(q, ast.And):
-            # And(ONE term-class positive, simple filters) runs as
-            # data too (r6): the term rows join the one shared plan,
-            # the filters group by STRUCTURAL SIGNATURE (field/op/value
-            # type, value abstracted) — a registry of thousands of
-            # per-user "match X where attr op value" standing queries
-            # costs one plan per distinct signature, not per query.
-            from sparksearchengine_spark.plans.compiler import _flatten
-
-            ops = _flatten(ast.And, q.operands)
-            filts = [o for o in ops if isinstance(o, ast.Filter)]
-            poss = [
-                o
-                for o in ops
-                if not isinstance(o, (ast.Filter, ast.Not))
-            ]
-            negs = [o for o in ops if isinstance(o, ast.Not)]
-            if len(poss) == 1 and filts and not negs:
-                tw = _as_weighted(poss[0])
-                sigs = [_slot_sig(fl) for fl in filts]
-                if tw is not None and tw[0] and None not in sigs:
-                    rows, min_match = tw
-                    for field, t, w in rows:
-                        term_rows.append((qid, field, t, w, min_match))
-                    ordered = sorted(
-                        zip(sigs, filts), key=lambda p: p[0]
-                    )
-                    sig = tuple(s for s, _ in ordered)
-                    filtered_groups.setdefault(sig, []).append(
-                        (qid, [fl for _, fl in ordered])
-                    )
-                    filtered_ids.add(qid)
-                    continue
-        ts = _as_weighted(q)
-        if ts is not None:
-            rows, min_match = ts
-            for field, t, w in rows:
-                term_rows.append((qid, field, t, w, min_match))
-        else:
-            general.setdefault(q, []).append(qid)
-
-    if len(general) + len(filtered_groups) > max_plans:
-        raise ValueError(
-            f"batch has {len(general)} distinct non-term-class query "
-            f"shapes + {len(filtered_groups)} filter signatures "
-            f"(> max_plans={max_plans}); each costs a plan branch. "
-            "Split the batch, raise max_plans, or move standing "
-            "query sets to streaming.prepare_percolator."
-        )
-
-    branches: list[DataFrame] = []
-    if term_rows:
-        qterms = spark.createDataFrame(
-            term_rows,
-            "query_id long, field string, term string, _w double,"
-            " _minm int",
-        )
-        fields = sorted({r[1] for r in term_rows})
-        sp = None
-        for f in fields:
-            # driver-literal terms: static bucket isin, pruned at plan
-            # time exactly like the compiler's single-query path
-            one = index.scored_postings(
-                f,
-                prune_terms=(
-                    {r[2] for r in term_rows if r[1] == f}
-                    if index.term_buckets
-                    else None
-                ),
-            ).withColumn("field", F.lit(f))
-            sp = one if sp is None else sp.unionByName(one)
-        # the query side is a driver-built literal bounded by the
-        # caller's Iterable — always broadcast, postings never shuffle
-        scored = sp.join(F.broadcast(qterms), ["field", "term"])
-        agg = scored.groupBy("query_id", DOC_ID).agg(
-            F.sum(F.col("tscore") * F.col("_w")).alias(SCORE),
-            F.count(F.lit(1)).alias("_nm"),  # distinct terms per query
-            F.first("_minm").alias("_minm"),
-        )
-        tmatch = agg.where(F.col("_nm") >= F.col("_minm")).select(
-            "query_id", DOC_ID, SCORE
-        )
-        if filtered_ids:
-            # the plain branch + every signature branch read tmatch,
-            # and Catalyst does not reliably reuse the exchange across
-            # union arms — without this persist the corpus-wide
-            # score aggregation (the hottest join in the engine) would
-            # re-run once per signature (≤ max_plans times). Registered
-            # on the index so release_caches() frees it. (The column
-            # path avoids the fan-out structurally — one fsig-dispatched
-            # branch — but here slot values keep their NATIVE types
-            # per signature (date/Decimal/in-set), which a single
-            # shared frame cannot carry.)
-            tmatch = tmatch.persist()
-            tmatch.count()  # materialize BEFORE the per-signature
-            # branches fan out: they read this from independent stages
-            # of one job, and a cold cache re-runs the corpus-wide
-            # score aggregation once per signature — exactly what this
-            # persist exists to avoid (stage-race guard, r10)
-            index.register_cache(tmatch)
-            branches.append(
-                tmatch.where(
-                    ~F.col("query_id").isin(sorted(filtered_ids))
-                )
-            )
-            c = index.corpus
-            for sig, members in filtered_groups.items():
-                gids = sorted(m[0] for m in members)
-                fields = sorted({s[1] for s in sig})
-                attrs = c.df.select(
-                    F.col(c.id_col).cast("long").alias(DOC_ID),
-                    *[F.col(f).alias(f"_a_{f}") for f in fields],
-                )
-                # per-query comparison values, one frame per
-                # signature: slot i's columns are typed by the
-                # signature (same value types across members by
-                # construction)
-                names: list[str] = ["query_id"]
-                for i, s in enumerate(sig):
-                    if s[0] == "cmp":
-                        names.append(f"_s{i}_v")
-                    elif s[0] == "range":
-                        names += [f"_s{i}_lo", f"_s{i}_hi"]
-                    elif s[0] == "in":
-                        names.append(f"_s{i}_set")
-                vrows = []
-                for qid, filts in members:
-                    row: list = [qid]
-                    for fl in filts:
-                        if isinstance(fl, ast.CompareFilter):
-                            row.append(fl.value)
-                        elif isinstance(fl, ast.RangeFilter):
-                            row += [fl.lo, fl.hi]
-                        elif isinstance(fl, ast.InSetFilter):
-                            row.append(list(fl.values))
-                    vrows.append(tuple(row))
-                vals = spark.createDataFrame(vrows, names)
-                sub = (
-                    tmatch.where(F.col("query_id").isin(gids))
-                    .join(attrs, DOC_ID)
-                    .join(F.broadcast(vals), "query_id")
-                )
-                for i, s in enumerate(sig):
-                    att = F.col(f"_a_{s[1]}")
-                    if s[0] == "cmp":
-                        sub = sub.where(
-                            _DSL_FILTER_OPS[s[2]](
-                                att, F.col(f"_s{i}_v")
-                            )
-                        )
-                    elif s[0] == "range":
-                        sub = sub.where(
-                            att.between(
-                                F.col(f"_s{i}_lo"), F.col(f"_s{i}_hi")
-                            )
-                        )
-                    elif s[0] == "in":
-                        sub = sub.where(
-                            F.array_contains(F.col(f"_s{i}_set"), att)
-                        )
-                    elif s[0] == "exists":
-                        sub = sub.where(att.isNotNull())
-                    else:  # missing
-                        sub = sub.where(att.isNull())
-                branches.append(sub.select("query_id", DOC_ID, SCORE))
-        else:
-            branches.append(tmatch)
-    if phrase_rows:
-        from sparksearchengine_spark.plans.compiler import (
-            _scored_postings,
-        )
-
-        pq = spark.createDataFrame(
-            phrase_rows,
-            "query_id long, field string, _n int, _maxspan int,"
-            " qpos int, term string",
-        )
-        # one positions-carrying scan per field, restricted to the
-        # union of that field's phrase terms (driver-known literals —
-        # the same bucket-pruned scan the single-query plan uses)
-        by_field: dict[str, set] = {}
-        for _, f, _, _, _, t in phrase_rows:
-            by_field.setdefault(f, set()).add(t)
-        pp = None
-        for f, ts in by_field.items():
-            one = _scored_postings(index, f, sorted(ts)).withColumn(
-                "field", F.lit(f)
-            )
-            pp = one if pp is None else pp.unionByName(one)
-        joined = pp.join(F.broadcast(pq), ["field", "term"])
-        branches.append(_phrase_verify_branch(joined))
-    if mt_rows:
-        # multi-term queries as data: ONE vocabulary scan serves every
-        # wildcard/regex/fuzzy pattern in the batch. The pattern frame
-        # broadcasts into a hash join on `field` against TERMSTATS with
-        # the generic like/rlike/levenshtein OR-condition as the ONE
-        # post-join filter (plan-asserted in TestPlanShapeRound2 —
-        # dictionary-sized, the Lucene MultiTermQuery contract: the
-        # postings side never evaluates a LIKE/regex/levenshtein), then
-        # the matched (query_id, term) pairs hash-join the shared
-        # scored-postings scan; docs dedupe to constant score 1.0,
-        # exactly the single-query `_multi_term_docs` semantics.
-        mtq = spark.createDataFrame(
-            mt_rows,
-            "query_id long, field string, kind string, pat string,"
-            " edits int",
-        )
-        mt_fields = sorted({r[1] for r in mt_rows})
-        vocab = index.termstats.where(
-            F.col("field").isin(mt_fields)
-        ).select("field", "term")
-        hit = (
-            (F.col("kind") == "like") & F.expr("term like pat")
-        ) | (
-            (F.col("kind") == "re") & F.expr("term rlike pat")
-        ) | (
-            (F.col("kind") == "fz")
-            & F.length("term").between(
-                F.length("pat") - F.col("edits"),
-                F.length("pat") + F.col("edits"),
-            )
-            & (F.levenshtein(F.col("term"), F.col("pat")) <= F.col("edits"))
-        )
-        matched = vocab.join(
-            F.broadcast(mtq), ["field"]
-        ).where(hit).select("query_id", "field", "term")
-        msp = None
-        for f in mt_fields:
-            # matched terms are data (patterns x vocabulary): DPP prune
-            one = index.scored_postings(
-                f,
-                prune_terms=(
-                    matched.where(F.col("field") == f).select("term")
-                    if index.term_buckets
-                    else None
-                ),
-            ).withColumn("field", F.lit(f))
-            msp = one if msp is None else msp.unionByName(one)
-        # matched cardinality is data-dependent (patterns x vocabulary):
-        # probed broadcast, shuffle_hash fallback — never assume a
-        # pattern's expansion fits on the executors
-        branches.append(
-            msp.join(_hint_data_side(matched), ["field", "term"])
-            .select("query_id", DOC_ID)
-            .distinct()
-            .select("query_id", DOC_ID, F.lit(1.0).alias(SCORE))
-        )
-    for q, qids in general.items():
-        compiled = index.compile(q)
-        id_frame = spark.createDataFrame(
-            [(int(i),) for i in qids], "query_id long"
-        )
-        branches.append(
-            compiled.crossJoin(F.broadcast(id_frame)).select(
-                "query_id", DOC_ID, SCORE
-            )
-        )
-
-    if not branches:
-        # every query analyzed to nothing
-        return spark.createDataFrame(
-            [], f"query_id long, {DOC_ID} long, {SCORE} double"
-        )
-    unioned = branches[0]
-    for b in branches[1:]:
-        unioned = unioned.unionByName(b)
-    return unioned
+        rec = _normalize_tree(q, text_cols, corpus_cols)
+        if rec["shape"] == "general":
+            # equal trees share one compiled plan; repr keeps value
+            # types apart (True == 1, but their filters differ)
+            rec["canon"] = keys.setdefault(repr(q), str(len(keys)))
+            plans[rec["canon"]] = q
+        recs.append({"query_id": qid, **rec})
+        flds = {
+            "terms": sorted({t["field"] for t in rec["terms"] or ()}),
+            "phrase": [rec["ph_field"]],
+            "mt": [rec["mt_field"]],
+        }.get(rec["shape"], [None])
+        groups += [{**rec, "fld": f} for f in flds]
+    summary = _summarize(groups, op_name, max_plans)
+    _check_patterns(
+        len(
+            {
+                (r["mt_field"], r["mt_kind"], r["mt_pat"], r["mt_edits"])
+                for r in recs
+                if r["shape"] == "mt"
+            }
+        ),
+        MAX_DISTINCT_PATTERNS,
+    )
+    nz = index.postings.sparkSession.createDataFrame(
+        recs, "query_id long, " + _NORM_SCHEMA
+    )
+    return _dsl_tiers(index, nz, None, summary, True, plans)
 
 
 # -- E7-E10: query join ----------------------------------------------------

@@ -634,9 +634,9 @@ def percolate_stream_dsl(
     not just term sets. Each micro-batch is indexed in place (a
     micro-batch is small; `Corpus.build_index` over it is a few
     aggregations) and matched against every registered query through
-    the shape-grouped `operators.search.percolate_dsl` — term classes
-    and exact phrases as data in shared plans, other shapes once per
-    distinct AST. Matches land at ``out_path/batch_id=N`` as
+    `operators.search.percolate_dsl`, the one DSL executor — term
+    classes, num/str filters, phrases and patterns as data in shared
+    plans, other shapes once per distinct AST. Matches land at ``out_path/batch_id=N`` as
     ``(query_id, doc_id, score)`` rows (idempotent per-batch overwrite,
     the module's exactly-once pattern).
 

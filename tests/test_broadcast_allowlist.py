@@ -69,21 +69,16 @@ ALLOWLIST = {
     ("operators/index.py", "upsert_index", "broadcast"):
         (2, "probed (touched ids, decide_broadcast 5M budget) + "
             "driver-literal (deletes list form only)"),
-    ("operators/joindsl.py", "_dsl_column_scored_union", "broadcast"):
+    ("operators/joindsl.py", "_dsl_tiers", "broadcast"):
         (2, "cap: pats <= max_patterns (loud ValueError); "
             "probed: gq single-canon id frame (decide_broadcast)"),
-    ("operators/joindsl.py", "_dsl_column_scored_union", "crossJoin"):
+    ("operators/joindsl.py", "_dsl_tiers", "crossJoin"):
         (1, "probed: broadcast iff gq under budget, else "
             "shuffle_replicate_nl — never a BNLJ build side"),
     ("operators/profile.py", "skew_report", "broadcast"):
         (1, "1-row: global count frame"),
     ("operators/profile.py", "skew_report", "crossJoin"):
         (1, "1-row: global count frame"),
-    ("operators/search.py", "_dsl_scored_union", "broadcast"):
-        (5, "driver-literal: term/phrase/value/id frames built from the "
-            "batch list (bounded by max_plans and driver memory)"),
-    ("operators/search.py", "_dsl_scored_union", "crossJoin"):
-        (1, "driver-literal: per-canon query-id frame"),
     ("operators/search.py", "_hint_data_side", "broadcast"):
         (1, "probed: THE data-side ladder (trust_bytes=False), "
             "shuffle_hash fallback"),
