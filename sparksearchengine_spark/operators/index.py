@@ -473,6 +473,33 @@ class SearchIndex:
             self._scored_cache[field] = scored
         return self._scored_cache[field]
 
+    def scored_postings_union(
+        self, fields: "list[str]", prune_terms: DataFrame
+    ) -> DataFrame:
+        """(term, doc_id, tscore, field): :meth:`scored_postings` of
+        exactly ``fields``, unioned — the postings side of every
+        terms-as-data join (batch search, query join, the DSL term and
+        pattern tiers). A one-field batch over a ten-field corpus scans
+        one field's postings, not ten.
+
+        ``prune_terms`` (a frame with ``field`` and ``term`` columns —
+        the query side's terms): on a term-bucketed index each field's
+        scan is pruned to the buckets its own terms touch (DPP,
+        uncached); ignored otherwise, so the cached per-field frames
+        serve."""
+        sp = None
+        for f in fields:
+            one = self.scored_postings(
+                f,
+                prune_terms=(
+                    prune_terms.where(F.col("field") == f).select("term")
+                    if self.term_buckets
+                    else None
+                ),
+            ).withColumn("field", F.lit(f))
+            sp = one if sp is None else sp.unionByName(one)
+        return sp
+
     # -- convenience delegates (implementations live in operators/) --------
 
     def compile(self, query) -> DataFrame:  # type: ignore[no-untyped-def]

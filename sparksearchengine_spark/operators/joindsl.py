@@ -80,14 +80,17 @@ from sparksearchengine_spark.operators.search import (
     BROADCAST_MAX_QUERY_ROWS,
     DOC_ID,
     SCORE,
-    _DSL_FILTER_OPS,
+    _attach_elements,
     _hint_data_side,
     _hint_query_side,
+    _key_rows,
     _phrase_verify_branch,
+    _rank_order,
     decide_broadcast,
     topk_per_group,
     weighted_terms_cfg,
 )
+from sparksearchengine_spark.plans.compiler import COMPARE_OPS
 
 if TYPE_CHECKING:
     from sparksearchengine_spark.operators.index import SearchIndex
@@ -391,23 +394,6 @@ def _normalize_one(
     return out
 
 
-def _attach_elements(out: DataFrame, c, with_elements: bool) -> DataFrame:
-    """Join the match payload back onto the flat result rows (the E6
-    raw/transformer variants' shape), prefixing corpus columns with
-    ``match_``; no-op when ``with_elements`` is False."""
-    if not with_elements:
-        return out
-    elems = c.df.select(
-        F.col(c.id_col).cast("long").alias("match_doc_id"),
-        *[
-            F.col(x).alias(f"match_{x}")
-            for x in c.df.columns
-            if x != c.id_col
-        ],
-    )
-    return out.join(elems, "match_doc_id", "left")
-
-
 def _sig_predicate_expr(sig: str):  # type: ignore[no-untyped-def]
     """One signature group's filter slots as a single Column predicate:
     slot i's typed values live at fvals[i] (`_normalize_tree` sorted
@@ -430,7 +416,7 @@ def _sig_predicate_expr(sig: str):  # type: ignore[no-untyped-def]
             op, cls = parts[2], parts[3]
             v = val["v_num"] if cls == "num" else val["v_str"]
             a = att.cast("double") if cls == "num" else att
-            conds.append(_DSL_FILTER_OPS[op](a, v))
+            conds.append(COMPARE_OPS[op](a, v))
         elif kind == "range":
             cls = parts[2]
             if cls == "num":
@@ -485,12 +471,13 @@ def query_join_dsl(
     term, row 2 a phrase, row 3 a filtered boolean.
 
     Returns ``other.* + (match_doc_id, score, rank)`` flat rows, top-k
-    per row, left join (rows whose query matches nothing — or whose
-    query analyzes to nothing, or is NULL — keep NULL match columns);
-    the `search.query_join` contract. ``with_elements`` joins the match
-    payload back (broadcast — bounded by |other|·k hits only when the
-    hits side is small; at corpus-scale ``other`` the join shuffles on
-    match_doc_id as usual).
+    per row by the engine's one rank order (`search._rank_order`:
+    ``(round(score, 6) desc, doc_id asc)``), left join (rows whose query
+    matches nothing — or whose query analyzes to nothing, or is NULL —
+    keep NULL match columns); the `search.query_join` contract.
+    ``with_elements`` joins the match payload back (broadcast — bounded
+    by |other|·k hits only when the hits side is small; at corpus-scale
+    ``other`` the join shuffles on match_doc_id as usual).
 
     Invalid rows (malformed JSON, unknown fields, phrase on a
     positions=False column) raise a driver-side ``ValueError`` naming
@@ -514,23 +501,12 @@ def query_join_dsl(
     registry). Must have been prepared from THIS ``other`` frame with
     the same id/query columns; caller owns its cache.
     """
-    if other_id_col is None:
-        if prepared is not None:
-            raise ValueError(
-                "prepared requires an explicit other_id_col — a "
-                "synthesized id cannot match the prepared frame's ids"
-            )
-        # same determinism note as query_join: the id-stamped frame is
-        # referenced by several plan branches, so pin the nondeterministic
-        # ids with a lazy localCheckpoint
-        other = other.withColumn(
-            "_qid", F.monotonically_increasing_id()
-        ).localCheckpoint(eager=False)
-        other_id_col = "_qid"
-        synthesized = True
-    else:
-        synthesized = False
-    c = index.corpus
+    if other_id_col is None and prepared is not None:
+        raise ValueError(
+            "prepared requires an explicit other_id_col — a "
+            "synthesized id cannot match the prepared frame's ids"
+        )
+    other, other_id_col, internal = _key_rows(other, other_id_col)
     nz, unioned = _dsl_column_scored_union(
         index,
         other,
@@ -562,7 +538,7 @@ def query_join_dsl(
         ranked = topk_per_group(
             unioned,
             ["query_id"],
-            [F.col(SCORE).desc(), F.col(DOC_ID).asc()],
+            _rank_order(),
             k=k,
             salt_buckets=salt_buckets,
         ).select(
@@ -577,10 +553,8 @@ def query_join_dsl(
     # itself named "query_id" must survive the join
     out = other.join(
         ranked, other[other_id_col] == ranked["query_id"], "left"
-    ).drop(ranked["query_id"])
-    if synthesized:
-        out = out.drop("_qid")
-    return _attach_elements(out, c, with_elements)
+    ).drop(ranked["query_id"]).drop(*internal)
+    return _attach_elements(out, index.corpus, with_elements)
 
 
 def percolate_dsl_df(
@@ -990,40 +964,18 @@ def _dsl_tiers(
     shared: dict = {}
 
     def _scored_union(
-        flds: "list[str]",
-        prune_terms: "DataFrame | None" = None,
-        tier: str = "",
+        flds: "list[str]", prune_terms: DataFrame, tier: str
     ) -> DataFrame:
-        # union of the cached scored postings of exactly the fields the
-        # summary saw in this tier's rows — a one-field batch over a
-        # ten-field corpus scans one field's postings, not ten.
-        # Memoized per (field SET, tier) so tiers touching the same
-        # fields share the frame.
-        # ``prune_terms`` (a (field, term) frame — this tier's query
-        # terms): on a term-bucketed saved index the per-field scan
-        # semi-joins the query side's derived bucket set against the
-        # _tbucket partition column (DPP) instead of reading all
-        # buckets; that path is uncached by design
-        # (SearchIndex.scored_postings), hence the tier tag in the key.
-        # the tier tag matters ONLY when bucket pruning will actually
-        # run (term-bucketed index + terms to prune with) — otherwise
+        # `SearchIndex.scored_postings_union` of exactly the fields the
+        # summary saw in this tier's rows, memoized per (field SET, tier)
+        # so tiers touching the same fields share the frame. The tier tag
+        # matters ONLY on a term-bucketed index, where the union is the
+        # uncached scan pruned to this tier's terms — otherwise
         # collapsing it lets every tier share one cached union instead
         # of building identical plan branches (r9 review finding)
-        prunes = prune_terms is not None and bool(index.term_buckets)
-        key = (tuple(flds), tier if prunes else "")
+        key = (tuple(flds), tier if index.term_buckets else "")
         if key not in shared:
-            sp = None
-            for f in flds:
-                pt = (
-                    prune_terms.where(F.col("field") == f).select("term")
-                    if prunes
-                    else None
-                )
-                one = index.scored_postings(f, prune_terms=pt).withColumn(
-                    "field", F.lit(f)
-                )
-                sp = one if sp is None else sp.unionByName(one)
-            shared[key] = sp
+            shared[key] = index.scored_postings_union(flds, prune_terms)
         return shared[key]
 
     sigs = summary["sigs"]

@@ -24,7 +24,7 @@ Here every one of those collapses into Catalyst constructs:
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING, Iterable
+from typing import TYPE_CHECKING, Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -33,6 +33,7 @@ from sparksearchengine_spark.functions.analyzers import (
     analyzer_expr,
     explode_tokens,
 )
+from sparksearchengine_spark.plans.compiler import COMPARE_OPS
 
 if TYPE_CHECKING:
     from sparksearchengine_spark.operators.index import SearchIndex
@@ -166,6 +167,17 @@ def _hint_data_side(
     return df.hint("shuffle_hash")
 
 
+def _rank_order() -> list:
+    """THE rank order of the query operators — `search`, `batch_search`,
+    `query_join`, `batch_search_dsl`, `query_join_dsl`: ``(round(score,
+    6) DESC, doc_id ASC)``. Scores equal at 6 dp are ties broken by
+    doc_id, so two float sums of the same terms that differ in the last
+    ulp (a different partial-sum order, a ``Boost`` fold) rank the same
+    way in every operator, and a cursor comparing rounded scores agrees
+    with the page order. ``score`` in the output stays full precision."""
+    return [F.round(F.col(SCORE), 6).desc(), F.col(DOC_ID).asc()]
+
+
 def ranked_topk(df: DataFrame, order_cols: list, k: int) -> DataFrame:
     """Global top-k with a 1-based ``rank`` column: orderBy+limit (=
     TakeOrderedAndProject, never a full sort) then row_number over the
@@ -249,19 +261,20 @@ def search(
     page (page-local).
 
     Boundary matching compares 6dp-ROUNDED scores on both sides (the
-    engine's score-equality contract everywhere else): the equality arm
-    compares the collected cursor against a RE-EXECUTED aggregated
-    score, and multi-partition float sums are not bit-deterministic
-    across jobs — a ≥3-term query whose cursor doc's partial sums merge
-    in a different order can drift 1 ulp, and EXACT equality would then
-    misclassify the boundary tie (skip or repeat that one doc). The
-    rounding absorbs the drift; distinct scores within 5e-7 of the
-    cursor are treated as boundary ties and disambiguated by doc_id —
-    and the SORT implements the same contract: pages rank by
-    ``(round(score, 6) DESC, doc_id ASC)``, so the cursor predicate and
-    the page order agree on which docs are "after" the cursor (ranking
-    by full precision while comparing rounded would deterministically
-    skip or repeat sub-6dp-distinct docs straddling a page boundary).
+    engine's score-equality contract, which every ranked query operator
+    shares through `_rank_order`): the equality arm compares the
+    collected cursor against a RE-EXECUTED aggregated score, and
+    multi-partition float sums are not bit-deterministic across jobs —
+    a ≥3-term query whose cursor doc's partial sums merge in a different
+    order can drift 1 ulp, and EXACT equality would then misclassify the
+    boundary tie (skip or repeat that one doc). The rounding absorbs the
+    drift; distinct scores within 5e-7 of the cursor are treated as
+    boundary ties and disambiguated by doc_id — and the SORT implements
+    the same contract: pages rank by `_rank_order`, ``(round(score, 6)
+    DESC, doc_id ASC)``, so the cursor predicate and the page order
+    agree on which docs are "after" the cursor (ranking by full
+    precision while comparing rounded would deterministically skip or
+    repeat sub-6dp-distinct docs straddling a page boundary).
     ``score`` in the output stays full precision.
     """
     if offset < 0:
@@ -283,11 +296,7 @@ def search(
         )
     # rank by the SAME rounded score the cursor predicate compares —
     # sub-6dp-distinct docs are ties everywhere, never page stragglers
-    hits = hits.orderBy(
-        F.round(F.col(SCORE), 6).desc(), F.col(DOC_ID).asc()
-    ).limit(k + offset)
-    w = Window.orderBy(F.round(F.col(SCORE), 6).desc(), F.col(DOC_ID).asc())
-    hits = hits.withColumn("rank", F.row_number().over(w))  # ≤ k+offset rows
+    hits = ranked_topk(hits, _rank_order(), k + offset)
     if offset:
         hits = hits.where(F.col("rank") > offset)
     return _join_elements(index, hits, with_elements, select_cols)
@@ -320,6 +329,24 @@ def _join_elements(
             "select_cols"
         )
     return F.broadcast(hits).join(elems, DOC_ID)
+
+
+def _attach_elements(out: DataFrame, c, with_elements: bool) -> DataFrame:
+    """E6 element join of the query joins (`query_join`,
+    `joindsl.query_join_dsl`): the match payload joined back onto the
+    flat result rows, corpus columns prefixed with ``match_``; no-op
+    when ``with_elements`` is False."""
+    if not with_elements:
+        return out
+    elems = c.df.select(
+        F.col(c.id_col).cast("long").alias("match_doc_id"),
+        *[
+            F.col(x).alias(f"match_{x}")
+            for x in c.df.columns
+            if x != c.id_col
+        ],
+    )
+    return out.join(elems, "match_doc_id", "left")
 
 
 def aggregating_search(
@@ -358,7 +385,8 @@ def batch_search(
     postings on (field, term) [query side broadcast when small, else
     shuffle-hash on the key — see ``_hint_query_side``] ->
     groupBy(query_id, doc_id) partial+final score agg -> per-query top-k
-    rank window. Returns (query_id, doc_id, score, rank).
+    rank window (`_rank_term_sets`, the core `query_join` shares).
+    Returns (query_id, doc_id, score, rank).
 
     When ``k_col`` is given it takes precedence over ``k``: the rank
     window is cut at max(k_col) and each query filtered to its own _k, so
@@ -393,16 +421,18 @@ def batch_search(
         if field_col
         else [field]
     )
-    analyzers = {
-        f: index.corpus.text_cols[f].query_time_analyzer() for f in fields
-    }
-
     window_k = k
     if k_col:  # window cutoff must cover the LARGEST per-query k
         max_k = queries_df.agg(F.max(F.col(k_col))).first()[0]
         window_k = int(max_k) if max_k is not None else k
 
-    kexpr = F.col(k_col) if k_col else F.lit(k)
+    # per-query values the core carries through its aggregate
+    carried = [F.col(k_col).alias("_k")] if k_col else []
+    if after_score_col:
+        carried += [
+            F.col(after_score_col).cast("double").alias("_as"),
+            F.col(after_doc_col).cast("long").alias("_ad"),
+        ]
 
     # mixed-analyzer fields: one analysis branch per distinct analyzer
     # (the reference's per-index loop trivially serves these —
@@ -411,7 +441,8 @@ def batch_search(
     # into the one shared join/agg/top-k plan.
     by_analyzer: dict[str, list[str]] = {}
     for f in fields:
-        by_analyzer.setdefault(analyzers[f], []).append(f)
+        an = index.corpus.text_cols[f].query_time_analyzer()
+        by_analyzer.setdefault(an, []).append(f)
 
     qterms = None
     for an, fs in by_analyzer.items():
@@ -423,93 +454,92 @@ def batch_search(
         branch = sub.select(
             F.col(query_id_col).alias("query_id"),
             fexpr.alias("field"),
-            kexpr.alias("_k"),
-            (
-                F.col(after_score_col).cast("double")
-                if after_score_col
-                else F.lit(None).cast("double")
-            ).alias("_as"),
-            (
-                F.col(after_doc_col).cast("long")
-                if after_doc_col
-                else F.lit(None).cast("long")
-            ).alias("_ad"),
+            *carried,
             F.explode(
                 F.array_distinct(analyzer_expr(F.col(text_col), an))
             ).alias("term"),
         )
         qterms = branch if qterms is None else qterms.unionByName(branch)
 
-    # per-posting scores are precomputed once per field and cached
-    # (SearchIndex.scored_postings); stats differences between fields are
-    # baked into the cached floats, so no per-row map lookup is needed
-    sp = None
-    for f in fields:
-        # bucketed saved layout: prune each field's postings scan to the
-        # buckets this batch's terms touch (DPP — terms are data here)
-        one = index.scored_postings(
-            f,
-            prune_terms=(
-                qterms.where(F.col("field") == f).select("term")
-                if index.term_buckets
-                else None
-            ),
-        ).withColumn("field", F.lit(f))
-        sp = one if sp is None else sp.unionByName(one)
-
-    qside = _hint_query_side(qterms, queries_df, broadcast_queries)
-    scored = sp.join(qside, ["field", "term"]).select(
-        "query_id", "_k", "_as", "_ad", F.col(DOC_ID), "tscore"
-    )
-    agg = scored.groupBy("query_id", DOC_ID).agg(
-        F.sum("tscore").alias(SCORE),
-        F.first("_k").alias("_k"),
-        F.first("_as").alias("_as"),
-        F.first("_ad").alias("_ad"),
-    )
-    if after_score_col:
+    def after_cursor(agg: DataFrame) -> DataFrame:
         # cursor as data: strictly after (score desc, doc_id asc) —
         # applied BEFORE the window so the rank heap never holds prior
         # pages' rows (NULL cursor = page 1, no filter for that query).
-        # The boundary compares 6dp-ROUNDED scores on both sides (the
-        # engine's score-equality contract everywhere else): a
-        # re-aggregated float sum can drift an ulp between the page-1
-        # run and the page-2 run with different partition order, and
-        # exact equality would then skip or repeat the boundary doc.
-        # Scores within 5e-7 of each other are treated as tied and
-        # disambiguated by doc_id, matching how the 6dp contract orders
-        # them for oracle comparison.
+        # The boundary compares 6dp-ROUNDED scores on both sides, as the
+        # rank order does: a re-aggregated float sum can drift an ulp
+        # between the page-1 run and the page-2 run with different
+        # partition order, and exact equality would then skip or repeat
+        # the boundary doc.
         rs, ra = F.round(F.col(SCORE), 6), F.round(F.col("_as"), 6)
-        agg = agg.where(
+        return agg.where(
             F.col("_as").isNull()
             | (rs < ra)
             | ((rs == ra) & (F.col(DOC_ID) > F.col("_ad")))
         )
-    # rank by the SAME rounded score the cursor predicate compares (the
-    # 6dp contract): ranking full-precision while the boundary compares
-    # rounded would skip/repeat sub-6dp-distinct docs across pages
-    ranked = topk_per_group(
-        agg,
-        ["query_id"],
-        [F.round(F.col(SCORE), 6).desc(), F.col(DOC_ID).asc()],
-        k=window_k,
-        salt_buckets=salt_buckets,
+
+    ranked = _rank_term_sets(
+        index, qterms, fields, queries_df, broadcast_queries, window_k,
+        salt_buckets, after_cursor if after_score_col else None,
     )
     if k_col:
         ranked = ranked.where(F.col("rank") <= F.col("_k"))
     return ranked.select("query_id", DOC_ID, SCORE, "rank")
 
 
-# comparison ops of the DSL executor's data-driven filter slots
-# (joindsl._sig_predicate_expr) — the same operator set as
-# plans.compiler._filter_pred
-_DSL_FILTER_OPS = {
-    "=": lambda a, b: a == b,
-    ">": lambda a, b: a > b,
-    ">=": lambda a, b: a >= b,
-    "<": lambda a, b: a < b,
-    "<=": lambda a, b: a <= b,
-}
+def _key_rows(
+    other: DataFrame, other_id_col: str | None
+) -> "tuple[DataFrame, str, list[str]]":
+    """(other, key column, internal columns to drop) for the query joins'
+    join-back. Without ``other_id_col`` a ``_qid`` is synthesized:
+    monotonically_increasing_id is nondeterministic across plan
+    re-evaluation and the id-stamped frame is referenced by several plan
+    branches (the query terms and the join-back), so it is pinned with a
+    lazy localCheckpoint — ids are materialized once."""
+    if other_id_col is not None:
+        return other, other_id_col, []
+    keyed = other.withColumn(
+        "_qid", F.monotonically_increasing_id()
+    ).localCheckpoint(eager=False)
+    return keyed, "_qid", ["_qid"]
+
+
+def _rank_term_sets(
+    index: "SearchIndex",
+    qterms: DataFrame,
+    fields: "list[str]",
+    size_src: DataFrame,
+    broadcast_queries: bool | None,
+    k: int,
+    salt_buckets: int | None,
+    candidates: "Callable[[DataFrame], DataFrame] | None" = None,
+) -> DataFrame:
+    """The batch core of `batch_search` and `query_join`: query-term rows
+    ``(query_id, field, term, *carried)`` -> ranked hits ``(query_id,
+    doc_id, score, _nm, *carried, rank)``, top-``k`` per query.
+
+    Plan: the cached per-field scored postings
+    (`SearchIndex.scored_postings_union`) join the query side on
+    (field, term) — broadcast when ``size_src``, the caller's frame, is
+    small, else shuffle-hash (`_hint_query_side`) -> groupBy(query_id,
+    doc_id) score sum, matched-term count ``_nm`` and ``first()`` of
+    each carried column -> ``candidates``, the caller's filter on that
+    aggregate (it runs BEFORE the window) -> per-query top-k under
+    `_rank_order`."""
+    carried = [c for c in qterms.columns if c not in ("query_id", "field", "term")]
+    scored = index.scored_postings_union(fields, qterms).join(
+        _hint_query_side(qterms, size_src, broadcast_queries),
+        ["field", "term"],
+    )
+    agg = scored.groupBy("query_id", DOC_ID).agg(
+        F.sum("tscore").alias(SCORE),
+        F.count(F.lit(1)).alias("_nm"),
+        *[F.first(c).alias(c) for c in carried],
+    )
+    if candidates is not None:
+        agg = candidates(agg)
+    return topk_per_group(
+        agg, ["query_id"], _rank_order(), k=k, salt_buckets=salt_buckets
+    )
 
 
 def batch_search_dsl(
@@ -566,7 +596,10 @@ def batch_search_dsl(
     clauses route to the compiled tier for exactness.
 
     Returns ``(query_id, doc_id, score, rank)``; queries with no hits
-    contribute no rows (same contract as `batch_search`).
+    contribute no rows (same contract as `batch_search`). Hits rank by
+    `_rank_order`, ``(round(score, 6) desc, doc_id asc)``, as in
+    `search()`: a fold that lands one ulp off the per-query score
+    cannot reorder a 6-dp tie.
     ``with_elements`` / ``select_cols`` join the corpus payload back
     onto the k-bounded hits (the E6 raw/transformer variants): the
     hits side is broadcast — bounded by |queries|·k — so the join is a
@@ -601,7 +634,7 @@ def batch_search_dsl(
         ranked = topk_per_group(
             unioned,
             ["query_id"],
-            [F.col(SCORE).desc(), F.col(DOC_ID).asc()],
+            _rank_order(),
             k=kmax,
             salt_buckets=salt_buckets,
         ).select("query_id", DOC_ID, SCORE, "rank")
@@ -990,9 +1023,7 @@ def more_like_this(
     matches = (
         index.scored_postings(
             field,
-            prune_terms=(
-                kws.select("term") if index.term_buckets else None
-            ),
+            prune_terms=kws.select("term"),
         )
         .join(kws, "term")
         .where(F.col(DOC_ID) != F.col("src_id"))
@@ -1025,6 +1056,16 @@ def query_join(
 ) -> DataFrame:
     """E7 — the flagship similarity join: for each row of ``other``, run the
     query generated from its ``text_col`` against the index, keep top-k.
+
+    It is `batch_search`'s core plus a join-back, the reference's
+    ``queryJoin`` shape (id assignment, per-row query generation,
+    ``batchSearch``, join on the query id —
+    `PartitionsIndexLuceneRDD.scala:265-285`): the rows of ``other`` are
+    keyed (``other_id_col``, a synthesized checkpointed id, or the
+    term-set hash under ``dedup_queries``), their analyzed terms run
+    through `_rank_term_sets` — the same scored-postings join, score
+    aggregate and per-query top-k as `batch_search`, under the one rank
+    order `_rank_order` — and the ranked hits left-join back on the key.
 
     ``row_filters`` widens the generated query toward the reference's
     fully general ``queryGenerator: U => DslQuery``
@@ -1069,19 +1110,11 @@ def query_join(
     ``min_should_match``/``require_all`` mirror matchAny/matchMin/matchAll
     query generation.
     """
-    _FILTER_OPS = {
-        "=": lambda a, b: a == b,
-        "!=": lambda a, b: a != b,
-        ">": lambda a, b: a > b,
-        ">=": lambda a, b: a >= b,
-        "<": lambda a, b: a < b,
-        "<=": lambda a, b: a <= b,
-    }
     row_filters = list(row_filters or [])
     for fld, op, col in row_filters:
-        if op not in _FILTER_OPS:
+        if op not in COMPARE_OPS:
             raise ValueError(
-                f"row_filters op {op!r} not in {sorted(_FILTER_OPS)}"
+                f"row_filters op {op!r} not in {sorted(COMPARE_OPS)}"
             )
         if col not in other.columns:
             raise ValueError(
@@ -1101,7 +1134,8 @@ def query_join(
     # size the join policy off the frame as the CALLER passed it: after a
     # localCheckpoint (the synthesized-id branch below) the plan is a
     # LogicalRDD whose stats degrade to the defaultSizeInBytes sentinel,
-    # which would veto broadcasting even a 10-row frame.
+    # which would veto broadcasting even a 10-row frame; its stats also
+    # upper-bound the dedup'd side.
     size_src = other
 
     if dedup_queries:
@@ -1133,58 +1167,33 @@ def query_join(
         # by their filter values: same term set + different thresholds
         # are different queries
         hash_src = (
-            F.struct(
-                F.col("_qkey"),
-                *[F.col(c) for _, _, c in row_filters],
-            )
+            F.struct("_qkey", *[c for _, _, c in row_filters])
             if row_filters
             else F.col("_qkey")
         )
         other = other.withColumn("_qkey", F.sort_array(qtoks)).withColumn(
             "_qh", F.md5(F.coalesce(F.to_json(hash_src), F.lit("")))
         )
-        qterms = explode_tokens(
-            other, [F.col("_qh").alias("query_id")], F.col("_qkey"), "_nq"
-        ).dropDuplicates(["query_id", "term"])
+        qv_key, internal = "_qh", ["_qkey", "_qh"]
+        qtoks = F.col("_qkey")
     else:
-        if other_id_col is None:
-            # monotonically_increasing_id is nondeterministic across plan
-            # re-evaluation; the id-stamped frame is referenced by TWO
-            # plan branches (qterms and the final join-back), so pin it
-            # with a lazy localCheckpoint — ids are materialized once.
-            other = other.withColumn(
-                "_qid", F.monotonically_increasing_id()
-            ).localCheckpoint(eager=False)
-            other_id_col = "_qid"
-        qterms = explode_tokens(
-            other, [F.col(other_id_col).alias("query_id")], qtoks, "_nq"
-        )
-    key = "query_id"
+        other, qv_key, internal = _key_rows(other, other_id_col)
+    qterms = explode_tokens(
+        other,
+        [F.col(qv_key).alias("query_id"), F.lit(field).alias("field")],
+        qtoks,
+        "_nq",
+    )
+    if dedup_queries:
+        qterms = qterms.dropDuplicates(["query_id", "term"])
 
-    # size the caller's frame, not the distinct/checkpointed one: its
-    # stats upper-bound the dedup'd side and carry the source's
-    # (accurate) scan estimate.
-    qside = _hint_query_side(qterms, size_src, broadcast_queries)
-    scored = (
-        index.scored_postings(
-            field,
-            prune_terms=(
-                qterms.select("term") if index.term_buckets else None
-            ),
-        )
-        .join(qside, "term")
-        .select(key, "_nq", F.col(DOC_ID), "tscore")
-    )
-    agg = scored.groupBy(key, DOC_ID).agg(
-        F.sum("tscore").alias(SCORE),
-        F.count(F.lit(1)).alias("_nmatched"),
-        F.first("_nq").alias("_nq"),
-    )
-    if require_all:
-        agg = agg.where(F.col("_nmatched") == F.col("_nq"))
-    elif min_should_match > 1:
-        agg = agg.where(F.col("_nmatched") >= min_should_match)
-    if row_filters:
+    def candidates(agg: DataFrame) -> DataFrame:
+        if require_all:
+            agg = agg.where(F.col("_nm") == F.col("_nq"))
+        elif min_should_match > 1:
+            agg = agg.where(F.col("_nm") >= min_should_match)
+        if not row_filters:
+            return agg
         # Occur.FILTER semantics: restrict candidates BEFORE the rank
         # window, zero score contribution. Doc attributes come from one
         # corpus join on doc_id; the query row's comparison values from
@@ -1198,60 +1207,35 @@ def query_join(
                 for i, (fld, _, _) in enumerate(row_filters)
             ],
         )
-        qv_key = "_qh" if dedup_queries else other_id_col
         qvals = other.select(
-            F.col(qv_key).alias(key),
+            F.col(qv_key).alias("query_id"),
             *[
                 F.col(col).alias(f"_qv_{i}")
                 for i, (_, _, col) in enumerate(row_filters)
             ],
-        ).dropDuplicates([key])
+        ).dropDuplicates(["query_id"])
         agg = agg.join(attrs, DOC_ID).join(
-            _hint_query_side(qvals, size_src, broadcast_queries), key
+            _hint_query_side(qvals, size_src, broadcast_queries), "query_id"
         )
-        for i, (fld, op, col) in enumerate(row_filters):
+        for i, (_, op, _) in enumerate(row_filters):
             agg = agg.where(
-                _FILTER_OPS[op](F.col(f"_doc_{i}"), F.col(f"_qv_{i}"))
+                COMPARE_OPS[op](F.col(f"_doc_{i}"), F.col(f"_qv_{i}"))
             )
-        agg = agg.drop(
-            *[f"_doc_{i}" for i in range(len(row_filters))],
-            *[f"_qv_{i}" for i in range(len(row_filters))],
-        )
-    ranked = topk_per_group(
-        agg,
-        [key],
-        [F.col(SCORE).desc(), F.col(DOC_ID).asc()],
-        k=k,
-        salt_buckets=salt_buckets,
-    ).select(key, F.col(DOC_ID).alias("match_doc_id"), SCORE, "rank")
+        return agg
 
-    if dedup_queries:
-        # fan results back out to every `other` row sharing the term
-        # set: plain left equi-join on the deterministic hash.
-        out = (
-            other.join(
-                ranked, other["_qh"] == ranked["query_id"], "left"
-            )
-            .drop("query_id", "_qkey", "_qh")
-        )
-    else:
-        out = other.join(
-            ranked, other[other_id_col] == ranked["query_id"], "left"
-        ).drop("query_id")
-        if other_id_col == "_qid":
-            out = out.drop("_qid")
-    if with_elements:
-        c = index.corpus
-        elems = c.df.select(
-            F.col(c.id_col).cast("long").alias("match_doc_id"),
-            *[
-                F.col(x).alias(f"match_{x}")
-                for x in c.df.columns
-                if x != c.id_col
-            ],
-        )
-        out = out.join(elems, "match_doc_id", "left")
-    return out
+    ranked = _rank_term_sets(
+        index, qterms, [field], size_src, broadcast_queries, k,
+        salt_buckets, candidates,
+    ).select("query_id", F.col(DOC_ID).alias("match_doc_id"), SCORE, "rank")
+
+    # left join back on the query key: with dedup_queries the hash fans
+    # the results out to every `other` row sharing the term set. The
+    # RANKED side's key drops by reference, so a caller id column itself
+    # named "query_id" survives.
+    out = other.join(
+        ranked, other[qv_key] == ranked["query_id"], "left"
+    ).drop(ranked["query_id"]).drop(*internal)
+    return _attach_elements(out, index.corpus, with_elements)
 
 
 def collect_matches(joined: DataFrame, group_cols: list[str]) -> DataFrame:

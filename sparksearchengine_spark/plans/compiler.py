@@ -34,6 +34,7 @@ the join). The groupBy(doc_id) aggregations are partial-agg friendly
 
 from __future__ import annotations
 
+import operator
 from functools import reduce
 from typing import TYPE_CHECKING
 
@@ -378,16 +379,24 @@ def _empty_result(index: "SearchIndex") -> DataFrame:
     return spark.createDataFrame([], f"{DOC_ID} long, {SCORE} double")
 
 
+# THE comparison-operator table: compiled CompareFilter nodes, the DSL
+# executor's data-driven filter slots (`joindsl._sig_predicate_expr`) and
+# `query_join`'s row_filters. "!=" is reachable only through row_filters
+# (`ast.CompareFilter` accepts the other five).
+COMPARE_OPS = {
+    "=": operator.eq,
+    "!=": operator.ne,
+    ">": operator.gt,
+    ">=": operator.ge,
+    "<": operator.lt,
+    "<=": operator.le,
+}
+
+
 def _filter_pred(node: ast.Filter):  # type: ignore[no-untyped-def]
     c = F.col(node.field)
     if isinstance(node, ast.CompareFilter):
-        return {
-            "=": c == F.lit(node.value),
-            ">": c > F.lit(node.value),
-            ">=": c >= F.lit(node.value),
-            "<": c < F.lit(node.value),
-            "<=": c <= F.lit(node.value),
-        }[node.op]
+        return COMPARE_OPS[node.op](c, F.lit(node.value))
     if isinstance(node, ast.RangeFilter):
         return c.between(F.lit(node.lo), F.lit(node.hi))
     if isinstance(node, ast.InSetFilter):

@@ -392,6 +392,10 @@ def running_user_stats(
     Output rows (one per key per batch the key appears in, plus one final
     row when a key's state times out): (key, n_events, sum_value,
     max_value, closed).
+
+    With processing-time timeouts the query never finishes on its own
+    (even under an ``availableNow`` trigger it keeps running no-data
+    batches to fire timeouts), so the caller stops it.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 

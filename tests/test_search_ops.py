@@ -3548,6 +3548,79 @@ class TestCursorRoundedSort:
         assert [t[0] for t in all_rows] == [t[0] for t in expect]
 
 
+class TestRankOrderUlpTie:
+    """One rank order for every query operator: scores equal at 6 dp are
+    ties broken by doc_id ascending, even when the two float sums differ
+    in the last ulp and the larger one sits on the larger doc_id."""
+
+    LOW, HIGH = 2.573396, 2.5733960000000004  # 1 ulp apart
+
+    def test_shared_ranking(self, spark):
+        import math
+
+        from sparksearchengine_spark.operators.search import (
+            _rank_order,
+            ranked_topk,
+            topk_per_group,
+        )
+
+        assert self.HIGH - self.LOW == math.ulp(self.LOW)
+        hits = spark.createDataFrame(
+            [(1, 3, self.HIGH), (1, 1, self.LOW)],
+            "query_id long, doc_id long, score double",
+        )
+        per_query = topk_per_group(hits, ["query_id"], _rank_order(), k=2)
+        single = ranked_topk(hits, _rank_order(), 2)
+        for ranked in (per_query, single):
+            assert [
+                r["doc_id"] for r in ranked.orderBy("rank").collect()
+            ] == [1, 3]
+
+    def test_dsl_operators_and_search(self, spark):
+        from sparksearchengine_spark import Corpus, TextOptions
+        from sparksearchengine_spark.functions.scoring import (
+            ScoringConfig,
+            register_scorer,
+        )
+        from sparksearchengine_spark.plans.ast import Q
+        from sparksearchengine_spark.plans.serde import query_to_json
+
+        # every posting scores exactly 1.0, so the Or's term weights are
+        # the scores: doc 3 sums 0.1 + 0.2 = 0.30000000000000004 and
+        # doc 1 scores 0.3 — one ulp lower, equal at 6 dp
+        register_scorer("unit_ulp", lambda tf, dl, df_t, n, avgdl: tf * 0 + 1.0)
+        docs = spark.createDataFrame(
+            [(1, "c"), (3, "a b"), (5, "z")], "doc_id long, text string"
+        )
+        idx = Corpus(
+            docs, id_col="doc_id",
+            text_cols={"text": TextOptions(analyzer="simple")},
+        ).build_index(scoring=ScoringConfig(similarity="unit_ulp"))
+        t = Q.field("text")
+        q = (
+            t.match_term("a").boost(0.1)
+            | t.match_term("b").boost(0.2)
+            | t.match_term("c").boost(0.3)
+        )
+        try:
+            batch = idx.batch_search_dsl([(7, q)], k=2).orderBy("rank")
+            rows = [(r["doc_id"], r["score"]) for r in batch.collect()]
+            assert [d for d, _ in rows] == [1, 3]
+            assert rows[1][1] > rows[0][1]  # the fixture's ulp pair
+            other = spark.createDataFrame(
+                [(7, query_to_json(q))], "qid long, q string"
+            )
+            joined = idx.query_join_dsl(
+                other, query_col="q", k=2, other_id_col="qid"
+            ).orderBy("rank")
+            assert [r["match_doc_id"] for r in joined.collect()] == [1, 3]
+            single = idx.search(q, k=2).orderBy("rank")
+            assert [r["doc_id"] for r in single.collect()] == [1, 3]
+        finally:
+            idx.release_caches()
+            idx.unpersist()
+
+
 class TestMatchedTermsProbe:
     """The multi-term expansion (vocabulary terms matching a pattern
     batch) has data-dependent cardinality — 'a*' on a web-corpus

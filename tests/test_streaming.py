@@ -3,6 +3,8 @@ windows, and incremental index maintenance via foreachBatch."""
 
 from __future__ import annotations
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -312,7 +314,18 @@ class TestStatefulOperator:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        # processing-time timeouts keep the availableNow query running
+        # no-data batches forever: wait until every written row has been
+        # processed, then stop it
+        seen: dict = {}
+        deadline = time.monotonic() + 120
+        try:
+            while sum(seen.values()) < 4 and time.monotonic() < deadline:
+                for p in q.recentProgress:
+                    seen[p["batchId"]] = p["numInputRows"]
+                time.sleep(0.2)
+        finally:
+            q.stop()
         rows = spark.sql("select * from user_stats").collect()
         # the LAST emitted row per user carries the running totals across
         # all batches: user 1 saw 10+5+7, user 2 saw 1
